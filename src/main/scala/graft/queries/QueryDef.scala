@@ -26,7 +26,7 @@ final case class QueryDef(
 object TempDirs {
   private val registered =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val hookInstalled: Unit =
+  private lazy val deleteAtExit: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       registered.forEach(p => deleteRecursively(p))
     }))
@@ -43,7 +43,7 @@ object TempDirs {
 
   /** Create a unique temp dir whose tree is deleted when the JVM exits. */
   def create(prefix: String): String = {
-    hookInstalled
+    deleteAtExit
     val p = java.nio.file.Files.createTempDirectory(prefix)
     registered.add(p)
     p.toString

@@ -2,7 +2,6 @@ package graft.secrets
 
 import graft.core.AgeInvalidInputException
 import java.nio.file.{Files, Paths}
-import scala.collection.concurrent.TrieMap
 
 /** Options for CREATE SECRET (TYPE age) — mirrors the reference's named
   * parameters (/root/reference/src/age_extension.cpp:155-159). */
@@ -28,26 +27,15 @@ final case class AgeSecret(
 
 /** Driver-side secret registry with the reference's validation ladder
   * (/root/reference/src/age_extension.cpp:73-142) and error strings
-  * (SURVEY.md §5.3). Key files are read on the driver only; executors see
-  * only the resolved key map, snapshotted into UDF closures at function
-  * registration (graft.sql.AgeFunctions re-registers on every mutation, so
-  * a cluster run ships a fresh immutable snapshot with the task closures —
-  * the Spark-native equivalent of the reference's per-row catalog lookup).
+  * (SURVEY.md §5.3). The registry is one immutable map; CREATE and DROP
+  * replace it under one lock, reads take the current map without one. Key
+  * files are read on the driver only. graft.sql.AgeFunctions binds the map
+  * current when a query is analysed into that query's expressions, so
+  * executors receive the keys with the task — the Spark-native equivalent
+  * of the reference's per-row catalog lookup.
   */
 object AgeSecretManager {
-  private val secrets = TrieMap[String, AgeSecret]()
-  private val listeners = new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-  private val ver = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Monotonic mutation counter — lets AgeFunctions.register skip the
-    * 8-UDF re-registration when the registry hasn't changed since the last
-    * call on that session (the bench runs each query body repeatedly). */
-  def version: Long = ver.get()
-
-  private def notifyChanged(): Unit = {
-    ver.incrementAndGet()
-    listeners.forEach(_.apply())
-  }
+  @volatile private var secrets = Map.empty[String, AgeSecret]
 
   /** Max key-file size, mirroring src/age_extension.cpp:58-60. */
   private val MaxKeyFileBytes = 1024 * 1024
@@ -70,13 +58,19 @@ object AgeSecretManager {
     * error, CREATE OR REPLACE overwrites, CREATE IF NOT EXISTS keeps the
     * existing secret untouched. */
   def create(name: String, opts: AgeSecretOptions,
-             replace: Boolean = false, ifNotExists: Boolean = false): AgeSecret = {
+             replace: Boolean = false, ifNotExists: Boolean = false): AgeSecret = synchronized {
     secrets.get(name) match {
-      case Some(existing) if ifNotExists => return existing
+      case Some(existing) if ifNotExists => existing
       case Some(_) if !replace =>
         fail(s"Secret with name '$name' already exists")
-      case _ => ()
+      case _ =>
+        val secret = validated(name, opts)
+        secrets += name -> secret
+        secret
     }
+  }
+
+  private def validated(name: String, opts: AgeSecretOptions): AgeSecret = {
     // public key: inline XOR file (ladder order mirrors the reference)
     if (opts.publicKey.isDefined && opts.publicKeyFile.isDefined)
       fail("Cannot specify both 'public_key' and 'public_key_file'")
@@ -115,34 +109,25 @@ object AgeSecretManager {
         }
       }
     }
-    val secret = AgeSecret(name, pub, priv, opts.keyId)
-    secrets.put(name, secret)
-    notifyChanged()
-    secret
+    AgeSecret(name, pub, priv, opts.keyId)
   }
 
-  def drop(name: String): Unit = {
-    if (secrets.remove(name).isEmpty) fail(s"Secret '$name' not found")
-    notifyChanged()
+  def drop(name: String): Unit = synchronized {
+    if (!secrets.contains(name)) fail(s"Secret '$name' not found")
+    secrets -= name
   }
 
   def get(name: String): Option[AgeSecret] = secrets.get(name)
 
-  /** Immutable (public, private) key snapshot for UDF closures. */
-  def snapshot: Map[String, (Option[String], Option[String])] =
-    secrets.readOnlySnapshot().toMap.map { case (n, s) => n -> (s.publicKey, s.privateKey) }
+  /** The current registry, for binding into a query at analysis time. */
+  def snapshot: Map[String, AgeSecret] = secrets
 
   /** Redacted listing rows, the `duckdb_secrets()` equivalent
     * (test/sql/age_secret.test:22-26). The reference carries key_id in the
     * secret's named-value map (age_secret.test:31-35 creates with key_id),
     * so the listing surfaces it; keys stay redacted. */
-  def list: Seq[(String, String, String, String)] = {
-    val snap = secrets.readOnlySnapshot().toMap
-    snap.keys.toSeq.sorted.map(n => (n, "age", "config", snap(n).keyId.getOrElse("")))
-  }
+  def list: Seq[(String, String, String, String)] =
+    secrets.toSeq.sortBy(_._1).map { case (n, s) => (n, "age", "config", s.keyId.getOrElse("")) }
 
-  def clear(): Unit = { secrets.clear(); notifyChanged() }
-
-  /** Registered by AgeFunctions so UDF snapshots refresh on every mutation. */
-  private[graft] def onChange(f: () => Unit): Unit = listeners.add(f)
+  def clear(): Unit = synchronized { secrets = Map.empty }
 }

@@ -4,11 +4,12 @@ import graft.core.AgeInvalidInputException
 import graft.secrets.{AgeSecretManager, AgeSecretOptions}
 import org.apache.spark.sql.{Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
 /** SQL DDL parity for the reference's secret surface (SURVEY.md §7 hard
   * part #2): `CREATE SECRET n (TYPE age, PUBLIC_KEY '…', …)` and
@@ -36,6 +37,10 @@ case class CreateAgeSecretCommand(name: String,
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("result", StringType, nullable = false)())
+
+  // plan strings (explain, UI, event log) name the parameters, never their
+  // values: a key literal or a subquery producing one must not show there
+  override protected def stringArgs: Iterator[Any] = Iterator(name, params.map(_._1))
 
   private def resolve(spark: SparkSession, v: SecretParamValue): String = v match {
     case LitParam(s) => s
@@ -187,18 +192,51 @@ class AgeDdlParser(delegate: ParserInterface) extends ParserInterface {
     delegate.parseRoutineParam(sqlText)
 }
 
+/** One SQL function graft installs: its name, its usage line, and the
+  * builder Catalyst calls with the argument expressions whenever a query
+  * resolves the name. `usage` starts with the signature `name(p1, …)`,
+  * which fixes the arity checked before `build` runs. */
+final case class SqlFunction[T](name: String, usage: String, build: Seq[Expression] => T) {
+  private val signature = usage.take(usage.indexOf(')') + 1)
+  private val arity = signature.drop(name.length + 1).dropRight(1).split(',').count(_.trim.nonEmpty)
+
+  private def checked(args: Seq[Expression]): T = {
+    if (args.length != arity)
+      throw new AgeInvalidInputException(
+        if (arity == 0) s"$signature takes no arguments"
+        else s"$signature takes exactly $arity argument${if (arity == 1) "" else "s"}")
+    build(args)
+  }
+
+  // one instance each, so installing into a registry again is a silent no-op
+  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => T) =
+    (FunctionIdentifier(name), new ExpressionInfo(classOf[SqlFunction[_]].getName, name, usage),
+      checked)
+
+  def installIn(registry: FunctionRegistryBase[T]): Unit = {
+    val (id, info, builder) = description
+    registry.registerFunction(id, info, builder)
+  }
+}
+
+object SqlFunction {
+  /** An integer-literal parameter `what` of function `fn`, at least `min`. */
+  def intLit(fn: String, what: String, e: Expression, min: Int = Int.MinValue): Int = e match {
+    case Literal(v: Int, IntegerType) =>
+      if (v < min) throw new AgeInvalidInputException(s"$fn: $what must be >= $min")
+      v
+    case _ => throw new AgeInvalidInputException(s"$fn: $what must be an integer literal")
+  }
+}
+
 /** Session extension point: `SparkSession.builder().withExtensions(new
   * GraftSparkExtensions)` (or spark.sql.extensions=graft.sql.GraftSparkExtensions)
-  * turns on the secret DDL and the `age_secrets()` table function. Scalar
-  * function registration stays explicit via AgeFunctions.register
-  * (mirroring the reference's LOAD-time hook). */
+  * turns on the secret DDL, the `age_secrets()` table function, the plan
+  * rules and the native functions of [[GraftSparkExtensions.natives]]. The
+  * age scalar functions stay explicit via AgeFunctions.register (mirroring
+  * the reference's LOAD-time hook). That registration is stateless: the
+  * functions bind secret names when a query is analysed. */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExpressionInfo}
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-  import org.apache.spark.unsafe.types.UTF8String
-
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectParser((_, delegate) => new AgeDdlParser(delegate))
     // COUNT(DISTINCT <integral>) → paged-bitmap aggregate: standard SQL
@@ -207,246 +245,79 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator tier: logical TopKPerGroup → partial/final bounded-heap
     // physical pair (see graft.plans.TopKPerGroup scaladoc)
     extensions.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    // native expressions reachable from pure SQL (not just the Scala DSL)
-    extensions.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.functions.CosineSim].getName, "cosine_sim",
-        "cosine_sim(a, b) - codegen cosine similarity of two float/double arrays"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 2)
-          throw new graft.core.AgeInvalidInputException(
-            "cosine_sim(a, b) takes exactly 2 arguments")
-        graft.functions.CosineSim(args(0), args(1))
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("cosine_sim_pair"),
-      new ExpressionInfo(classOf[graft.functions.CosineSimPair].getName, "cosine_sim_pair",
-        "cosine_sim_pair(a, b, prefix_len) - struct(full, prefix) cosine from one " +
-          "vector traversal; prefix_len must be an integer literal"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        if (args.length != 3)
-          throw new graft.core.AgeInvalidInputException(
-            "cosine_sim_pair(a, b, prefix_len) takes exactly 3 arguments")
-        val p = args(2) match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case _ => throw new graft.core.AgeInvalidInputException(
-            "cosine_sim_pair: prefix_len must be an integer literal")
-        }
-        graft.functions.CosineSimPair(args.head, args(1), p)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("token_stats"),
-      new ExpressionInfo(classOf[graft.functions.TokenStats].getName, "token_stats",
-        "token_stats(text) - [n_tokens, n_subwords, n_chars] per row, split-on-space semantics"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 1)
-          throw new graft.core.AgeInvalidInputException(
-            "token_stats(text) takes exactly 1 argument")
-        graft.functions.TokenStats(args.head)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[graft.functions.RepetitionStats].getName, "repetition_stats",
-        "repetition_stats(text) - [top2gram_count, n_2grams, top3gram_count, " +
-          "n_3grams] per row, split-on-space word-gram semantics"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 1)
-          throw new graft.core.AgeInvalidInputException(
-            "repetition_stats(text) takes exactly 1 argument")
-        graft.functions.RepetitionStats(args.head)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("band_keys"),
-      new ExpressionInfo(classOf[graft.functions.BandKeys].getName, "band_keys",
-        "band_keys(vec, n_planes, band_size) - LSH band keys of a float/double " +
-          "array; n_planes and band_size must be integer literals"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                   what: String): Int = e match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case _ => throw new graft.core.AgeInvalidInputException(
-            s"band_keys: $what must be an integer literal")
-        }
-        if (args.length != 3)
-          throw new graft.core.AgeInvalidInputException(
-            "band_keys(vec, n_planes, band_size) takes exactly 3 arguments")
-        graft.functions.BandKeys(args.head,
-          intLit(args(1), "n_planes"), intLit(args(2), "band_size"))
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("substring_run_fps"),
-      new ExpressionInfo(classOf[graft.functions.SubstringRunFps].getName,
-        "substring_run_fps",
-        "substring_run_fps(text, w) - md5 hex fingerprint per w-token " +
-          "window (array index = window start token), one zero-copy byte " +
-          "pass; w must be an integer literal"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        if (args.length != 2)
-          throw new graft.core.AgeInvalidInputException(
-            "substring_run_fps(text, w) takes exactly 2 arguments")
-        val w = args(1) match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case _ => throw new graft.core.AgeInvalidInputException(
-            "substring_run_fps: w must be an integer literal")
-        }
-        if (w < 1) throw new graft.core.AgeInvalidInputException(
-          "substring_run_fps: w must be >= 1")
-        graft.functions.SubstringRunFps(args.head, w)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("audio_fp"),
-      new ExpressionInfo(classOf[graft.functions.AudioFp].getName,
-        "audio_fp",
-        "audio_fp(pcm, frame_samples, n_frames, threshold) - packed-bits " +
-          "LONG fingerprint of a 16-bit LE PCM binary payload (bit f set " +
-          "iff frame f's integer energy exceeds threshold), one byte " +
-          "pass; the three parameters must be integer literals"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        if (args.length != 4)
-          throw new graft.core.AgeInvalidInputException(
-            "audio_fp(pcm, frame_samples, n_frames, threshold) takes exactly 4 arguments")
-        def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                   what: String): Int = e match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case _ => throw new graft.core.AgeInvalidInputException(
-            s"audio_fp: $what must be an integer literal")
-        }
-        val thr = args(3) match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v.toLong
-          case Literal(v: Long, org.apache.spark.sql.types.LongType) => v
-          case _ => throw new graft.core.AgeInvalidInputException(
-            "audio_fp: threshold must be an integer literal")
-        }
-        graft.functions.AudioFp(args.head,
-          intLit(args(1), "frame_samples"), intLit(args(2), "n_frames"), thr)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[graft.functions.CdcChunks].getName,
-        "cdc_chunks",
-        "cdc_chunks(text, mod) - content-defined-chunking ledger " +
-          "array<struct<chunk, fp, n_chars>> per document (h28-mod " +
-          "boundary words end their chunk), one byte pass; mod must be " +
-          "an integer literal"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        if (args.length != 2)
-          throw new graft.core.AgeInvalidInputException(
-            "cdc_chunks(text, mod) takes exactly 2 arguments")
-        val m = args(1) match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case _ => throw new graft.core.AgeInvalidInputException(
-            "cdc_chunks: mod must be an integer literal")
-        }
-        if (m < 1) throw new graft.core.AgeInvalidInputException(
-          "cdc_chunks: mod must be >= 1")
-        graft.functions.CdcChunks(args.head, m)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSig].getName, "minhash_sig",
-        "minhash_sig(text) - one-pass K=8 MinHash signature of the document's " +
-          "3-word shingle set (null when the document has fewer than 3 words)"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 1)
-          throw new graft.core.AgeInvalidInputException(
-            "minhash_sig(text) takes exactly 1 argument")
-        graft.functions.MinHashSig(args.head)
-      }))
-    // custom aggregates from pure SQL: the analyzer wraps a returned
-    // AggregateFunction in a Complete AggregateExpression itself
-    extensions.injectFunction((
-      FunctionIdentifier("minhash_agg"),
-      new ExpressionInfo(classOf[graft.functions.MinHashAgg].getName, "minhash_agg",
-        "minhash_agg(hash) - K-permutation MinHash signature of a group of 28-bit hashes"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 1)
-          throw new graft.core.AgeInvalidInputException(
-            "minhash_agg(hash) takes exactly 1 argument")
-        graft.functions.MinHashAgg(args.head)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("simhash_agg"),
-      new ExpressionInfo(classOf[graft.functions.SimHashAgg].getName, "simhash_agg",
-        "simhash_agg(h1, h2) - 56-bit SimHash of a group of paired 28-bit word hashes"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 2)
-          throw new graft.core.AgeInvalidInputException(
-            "simhash_agg(h1, h2) takes exactly 2 arguments")
-        graft.functions.SimHashAgg(args.head, args(1))
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("cms_agg"),
-      new ExpressionInfo(classOf[graft.functions.CmsAgg].getName, "cms_agg",
-        "cms_agg(hash) - 4x256 Count-Min-Sketch counter grid over 28-bit item hashes"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 1)
-          throw new graft.core.AgeInvalidInputException(
-            "cms_agg(hash) takes exactly 1 argument")
-        graft.functions.CmsAgg(args.head)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("sum128_agg"),
-      new ExpressionInfo(classOf[graft.functions.Sum128Agg].getName, "sum128_agg",
-        "sum128_agg(x) - exact 128-bit integer SUM of a BIGINT column, emitted as decimal digits"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 1)
-          throw new graft.core.AgeInvalidInputException(
-            "sum128_agg(x) takes exactly 1 argument")
-        graft.functions.Sum128Agg(args.head)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("bitmap_distinct"),
-      new ExpressionInfo(classOf[graft.functions.BitmapDistinct].getName, "bitmap_distinct",
-        "bitmap_distinct(c) - exact COUNT(DISTINCT) of an integral/date column via paged bitmaps"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.length != 1)
-          throw new graft.core.AgeInvalidInputException(
-            "bitmap_distinct(c) takes exactly 1 argument")
-        graft.functions.BitmapDistinct(args.head)
-      }))
-    extensions.injectFunction((
-      FunctionIdentifier("topk_agg"),
-      new ExpressionInfo(classOf[graft.functions.TopKAgg].getName, "topk_agg",
-        "topk_agg(score, id, k) - bounded-heap top-k (score desc, id asc); k must be an integer literal"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        if (args.length != 3)
-          throw new graft.core.AgeInvalidInputException(
-            "topk_agg(score, id, k) takes exactly 3 arguments")
-        val k = args(2) match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case _ => throw new graft.core.AgeInvalidInputException(
-            "topk_agg: k must be an integer literal")
-        }
-        graft.functions.TopKAgg(args.head, args(1), k)
-      }))
-    // `SELECT * FROM age_secrets()` — catalog-level table-valued function,
-    // the closer `duckdb_secrets()` parity (reference FUNCTIONS.md secret
-    // listing; the temp view registered by AgeFunctions remains for
-    // back-compat). The builder runs at analysis time, so each query sees
-    // the registry as of its own planning — same read-time semantics as
-    // the reference's transient secret catalog.
-    extensions.injectTableFunction((
-      FunctionIdentifier("age_secrets"),
-      new ExpressionInfo(classOf[GraftSparkExtensions].getName, "age_secrets",
-        "age_secrets() - lists registered age secrets (name, type, provider, key_id)"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (args.nonEmpty)
-          throw new graft.core.AgeInvalidInputException(
-            "age_secrets() takes no arguments")
-        val output = Seq("name", "type", "provider", "key_id")
-          .map(f => AttributeReference(f, org.apache.spark.sql.types.StringType,
-            nullable = false)())
-        val rows = graft.secrets.AgeSecretManager.list.map { case (n, t, p, k) =>
-          InternalRow(UTF8String.fromString(n), UTF8String.fromString(t),
-            UTF8String.fromString(p), UTF8String.fromString(k))
-        }
-        LocalRelation(output, rows)
-      }))
+    GraftSparkExtensions.natives.foreach(f => extensions.injectFunction(f.description))
+    extensions.injectTableFunction(AgeFunctions.secretsTable.description)
   }
+}
+
+object GraftSparkExtensions {
+  import SqlFunction.intLit
+  import graft.functions._
+
+  /** graft's native expressions and aggregates, reachable from pure SQL
+    * (not just the Scala DSL). The analyzer wraps a returned
+    * AggregateFunction in a Complete AggregateExpression itself. */
+  val natives: Seq[SqlFunction[Expression]] = Seq(
+    SqlFunction("cosine_sim",
+      "cosine_sim(a, b) - codegen cosine similarity of two float/double arrays",
+      a => CosineSim(a(0), a(1))),
+    SqlFunction("cosine_sim_pair",
+      "cosine_sim_pair(a, b, prefix_len) - struct(full, prefix) cosine from one " +
+        "vector traversal; prefix_len must be an integer literal",
+      a => CosineSimPair(a(0), a(1), intLit("cosine_sim_pair", "prefix_len", a(2)))),
+    SqlFunction("token_stats",
+      "token_stats(text) - [n_tokens, n_subwords, n_chars] per row, split-on-space semantics",
+      a => TokenStats(a(0))),
+    SqlFunction("repetition_stats",
+      "repetition_stats(text) - [top2gram_count, n_2grams, top3gram_count, " +
+        "n_3grams] per row, split-on-space word-gram semantics",
+      a => RepetitionStats(a(0))),
+    SqlFunction("band_keys",
+      "band_keys(vec, n_planes, band_size) - LSH band keys of a float/double " +
+        "array; n_planes and band_size must be integer literals",
+      a => BandKeys(a(0), intLit("band_keys", "n_planes", a(1)),
+        intLit("band_keys", "band_size", a(2)))),
+    SqlFunction("substring_run_fps",
+      "substring_run_fps(text, w) - md5 hex fingerprint per w-token " +
+        "window (array index = window start token), one zero-copy byte " +
+        "pass; w must be an integer literal",
+      a => SubstringRunFps(a(0), intLit("substring_run_fps", "w", a(1), min = 1))),
+    SqlFunction("audio_fp",
+      "audio_fp(pcm, frame_samples, n_frames, threshold) - packed-bits " +
+        "LONG fingerprint of a 16-bit LE PCM binary payload (bit f set " +
+        "iff frame f's integer energy exceeds threshold), one byte " +
+        "pass; the three parameters must be integer literals",
+      a => AudioFp(a(0), intLit("audio_fp", "frame_samples", a(1)),
+        intLit("audio_fp", "n_frames", a(2)), a(3) match {
+          case Literal(v: Long, LongType) => v
+          case e => intLit("audio_fp", "threshold", e).toLong
+        })),
+    SqlFunction("cdc_chunks",
+      "cdc_chunks(text, mod) - content-defined-chunking ledger " +
+        "array<struct<chunk, fp, n_chars>> per document (h28-mod " +
+        "boundary words end their chunk), one byte pass; mod must be " +
+        "an integer literal",
+      a => CdcChunks(a(0), intLit("cdc_chunks", "mod", a(1), min = 1))),
+    SqlFunction("minhash_sig",
+      "minhash_sig(text) - one-pass K=8 MinHash signature of the document's " +
+        "3-word shingle set (null when the document has fewer than 3 words)",
+      a => MinHashSig(a(0))),
+    SqlFunction("minhash_agg",
+      "minhash_agg(hash) - K-permutation MinHash signature of a group of 28-bit hashes",
+      a => MinHashAgg(a(0))),
+    SqlFunction("simhash_agg",
+      "simhash_agg(h1, h2) - 56-bit SimHash of a group of paired 28-bit word hashes",
+      a => SimHashAgg(a(0), a(1))),
+    SqlFunction("cms_agg",
+      "cms_agg(hash) - 4x256 Count-Min-Sketch counter grid over 28-bit item hashes",
+      a => CmsAgg(a(0))),
+    SqlFunction("sum128_agg",
+      "sum128_agg(x) - exact 128-bit integer SUM of a BIGINT column, emitted as decimal digits",
+      a => Sum128Agg(a(0))),
+    SqlFunction("bitmap_distinct",
+      "bitmap_distinct(c) - exact COUNT(DISTINCT) of an integral/date column via paged bitmaps",
+      a => BitmapDistinct(a(0))),
+    SqlFunction("topk_agg",
+      "topk_agg(score, id, k) - bounded-heap top-k (score desc, id asc); k must be an integer literal",
+      a => TopKAgg(a(0), a(1), intLit("topk_agg", "k", a(2)))))
 }

@@ -1,9 +1,15 @@
 package graft.sql
 
 import graft.core._
-import graft.secrets.AgeSecretManager
-import org.apache.spark.sql.SparkSession
+import graft.secrets.{AgeSecret, AgeSecretManager}
+import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference extension's six scalar functions as Spark UDFs, plus the
   * `age_try_decrypt` null-on-failure variant (our addition — SQL queries
@@ -15,19 +21,20 @@ import org.apache.spark.sql.functions.udf
   * constant-folded or re-ordered by Catalyst (the reference never declares
   * this to DuckDB — a latent bug there; Spark lets us do it right).
   *
-  * Secret-name resolution happens per row against an immutable snapshot of
-  * the driver-side registry captured in the UDF closure; every secret
-  * mutation re-registers the UDFs (AgeSecretManager.onChange), so executors
-  * always receive a current snapshot with the task closure — the
-  * distributed equivalent of the reference's per-row catalog lookup
-  * (src/age_extension.cpp:229-256, 292-320).
+  * Secret names bind when a query is analysed: the builder of each
+  * function that resolves secret names reads AgeSecretManager's current
+  * immutable map and closes that call's expression over it, so executors
+  * receive the keys with the task — the distributed equivalent of the
+  * reference's per-row catalog lookup (src/age_extension.cpp:229-256,
+  * 292-320). Registration is stateless: a CREATE or DROP SECRET is seen by
+  * the next query of every session without registering again.
   */
 object AgeFunctions {
   final case class AgeKeyPairRow(public_key: String, private_key: String)
 
-  type Secrets = Map[String, (Option[String], Option[String])]
+  type Secrets = Map[String, AgeSecret]
 
-  // ---- per-row kernels (serializable pure functions over the snapshot) ----
+  // ---- per-row kernels (serializable pure functions over the bound map) ----
 
   /** src/age_extension.cpp:229-256 — non-"age1" strings resolve as secret
     * names; every lookup failure collapses to the same message the host
@@ -35,7 +42,7 @@ object AgeFunctions {
   private def resolveRecipient(k: String, secrets: Secrets): Array[Byte] = {
     val resolved =
       if (k.startsWith("age1")) k
-      else secrets.get(k).flatMap(_._1).getOrElse(
+      else secrets.get(k).flatMap(_.publicKey).getOrElse(
         throw new AgeInvalidInputException(
           s"Invalid age recipient key: $k (not a valid age key or secret name)"))
     AgeKeys.parseRecipient(resolved) match {
@@ -49,7 +56,7 @@ object AgeFunctions {
   private def resolveIdentity(k: String, secrets: Secrets): Array[Byte] = {
     val resolved =
       if (k.startsWith("AGE-SECRET-KEY-1")) k
-      else secrets.get(k).flatMap(_._2).getOrElse(
+      else secrets.get(k).flatMap(_.privateKey).getOrElse(
         throw new AgeInvalidInputException(
           s"Invalid age identity key: $k (not a valid age key or secret name)"))
     AgeKeys.parseIdentity(resolved) match {
@@ -79,7 +86,7 @@ object AgeFunctions {
       throw new AgeInvalidInputException("Recipients list cannot be empty")
     val resolved = recipients.map { k =>
       if (k.startsWith("age1")) k
-      else secrets.get(k).flatMap(_._1).getOrElse(
+      else secrets.get(k).flatMap(_.publicKey).getOrElse(
         throw new AgeInvalidInputException(s"Invalid recipient: $k"))
     }
     val parsed = resolved.zipWithIndex.map { case (k, i) =>
@@ -98,88 +105,88 @@ object AgeFunctions {
 
   // ---- registration ----
 
-  private val sessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Long]()
-  private val hookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private def fixed(name: String, usage: String, f: UserDefinedFunction): SqlFunction[Expression] = {
+    val named = f.withName(name)
+    SqlFunction(name, usage, args => GraftShims.scalaUdf(named, args))
+  }
 
-  /** Register all functions + the `age_secrets` view on a session. Safe to
-    * call repeatedly (idempotent; refreshes the secret snapshot). Calls are
-    * O(1) no-ops while the secret registry is unchanged — query bodies call
-    * this defensively, and re-binding 8 UDFs per execution is pure planner
-    * overhead (it showed up as ~tens of ms in the bench loop). */
-  def register(spark: SparkSession): Unit = synchronized {
-    // version + snapshot are read INSIDE the lock: with concurrent queries
-    // (parallel Verify) an unsynchronized register could read a pre-CREATE
-    // snapshot, lose the CPU, and then overwrite the onChange hook's fresh
-    // registration with stale secret bindings — age06's secret-name lookup
-    // then fails at execution. Atomic read-check-register makes the last
-    // writer's (version, snapshot) pair consistent.
-    val version = AgeSecretManager.version
-    if (sessions.get(spark) == version) return
-    val secrets: Secrets = AgeSecretManager.snapshot
+  /** A function over the registry as of each call's analysis: `kernel`
+    * closes over the current map, `toUdf` builds types, encoders and flags
+    * once, and each call swaps its own closure in. */
+  private def bound[F <: AnyRef](name: String, usage: String)(kernel: Secrets => F)(
+      toUdf: F => UserDefinedFunction): SqlFunction[Expression] = {
+    val template = toUdf(kernel(Map.empty)).withName(name)
+    SqlFunction(name, usage,
+      args => GraftShims.scalaUdf(template, args).copy(function = kernel(AgeSecretManager.snapshot)))
+  }
 
-    spark.udf.register("age_keygen",
+  /** The age entries of graft's SQL function table. */
+  private val entries: Seq[SqlFunction[Expression]] = Seq(
+    fixed("age_keygen", "age_keygen() - fresh random keypair struct(public_key, private_key)",
       udf(() => { val kp = AgeKeys.generate(); AgeKeyPairRow(kp.publicKey, kp.privateKey) })
-        .asNondeterministic())
-
-    spark.udf.register("age_keygen_from_seed",
+        .asNondeterministic()),
+    fixed("age_keygen_from_seed",
+      "age_keygen_from_seed(seed) - deterministic keypair struct from a binary seed",
       udf((seed: Array[Byte]) => {
         val kp = AgeKeys.fromSeed(seed); AgeKeyPairRow(kp.publicKey, kp.privateKey)
-      }))
-
-    spark.udf.register("age_encrypt",
-      udf((data: Array[Byte], recipient: String) => encryptImpl(data, recipient, secrets))
-        .asNondeterministic())
-
-    spark.udf.register("age_encrypt_armor",
-      udf((data: Array[Byte], recipient: String) =>
+      })),
+    bound("age_encrypt",
+      "age_encrypt(data, recipient) - encrypt for one age1 key or secret name") { secrets =>
+      (data: Array[Byte], recipient: String) => encryptImpl(data, recipient, secrets)
+    }(udf(_).asNondeterministic()),
+    bound("age_encrypt_armor",
+      "age_encrypt_armor(data, recipient) - age_encrypt as ASCII-armored text") { secrets =>
+      (data: Array[Byte], recipient: String) =>
         if (data == null || recipient == null) null
-        else AgeFormat.armor(encryptImpl(data, recipient, secrets)))
-        .asNondeterministic())
-
-    spark.udf.register("age_decrypt",
-      udf((data: Array[Byte], identity: String) => decryptImpl(data, identity, secrets)))
-
-    spark.udf.register("age_try_decrypt",
-      udf((data: Array[Byte], identity: String) =>
+        else AgeFormat.armor(encryptImpl(data, recipient, secrets))
+    }(udf(_).asNondeterministic()),
+    bound("age_decrypt",
+      "age_decrypt(data, identity) - decrypt with one AGE-SECRET-KEY-1 key or secret name") {
+      secrets => (data: Array[Byte], identity: String) => decryptImpl(data, identity, secrets)
+    }(udf(_)),
+    bound("age_try_decrypt",
+      "age_try_decrypt(data, identity) - age_decrypt, NULL instead of an error") { secrets =>
+      (data: Array[Byte], identity: String) =>
         try decryptImpl(data, identity, secrets)
-        catch { case _: AgeInvalidInputException => null }))
-
-    spark.udf.register("age_encrypt_multi",
-      udf((data: Array[Byte], recipients: Seq[String]) =>
-        encryptMultiImpl(data, recipients, secrets)).asNondeterministic())
-
+        catch { case _: AgeInvalidInputException => null }
+    }(udf(_)),
+    bound("age_encrypt_multi",
+      "age_encrypt_multi(data, recipients) - encrypt for an array of keys or secret names") {
+      secrets => (data: Array[Byte], recipients: Seq[String]) =>
+        encryptMultiImpl(data, recipients, secrets)
+    }(udf(_).asNondeterministic()),
     // passphrase (scrypt stanza) surface — age spec coverage beyond the
     // reference's X25519-only recipients; decrypt auto-detects armor
-    spark.udf.register("age_encrypt_pass",
+    fixed("age_encrypt_pass", "age_encrypt_pass(data, passphrase) - passphrase encryption",
       udf((data: Array[Byte], passphrase: String) =>
         if (data == null || passphrase == null) null
         else AgeFormat.encryptWithPassphrase(data, passphrase))
-        .asNondeterministic())
-
-    spark.udf.register("age_decrypt_pass",
+        .asNondeterministic()),
+    fixed("age_decrypt_pass", "age_decrypt_pass(data, passphrase) - passphrase decryption",
       udf((data: Array[Byte], passphrase: String) =>
         if (data == null || passphrase == null) null
-        else AgeFormat.decryptWithPassphrase(data, passphrase)))
+        else AgeFormat.decryptWithPassphrase(data, passphrase))),
+    fixed("age_version", "age_version() - engine version string", udf(() => versionString)))
 
-    spark.udf.register("age_version", udf(() => versionString))
+  /** `age_secrets()`: the registry's redacted listing as of the query's
+    * analysis — the `duckdb_secrets()` equivalent. */
+  private[sql] val secretsTable: SqlFunction[LogicalPlan] = SqlFunction("age_secrets",
+    "age_secrets() - lists registered age secrets (name, type, provider, key_id)", _ => {
+      val output = Seq("name", "type", "provider", "key_id")
+        .map(AttributeReference(_, StringType, nullable = false)())
+      LocalRelation(output, AgeSecretManager.list.map { case (n, t, p, k) =>
+        InternalRow(Seq(n, t, p, k).map(UTF8String.fromString): _*)
+      })
+    })
 
-    refreshSecretsView(spark)
-
-    sessions.put(spark, version)
-    if (hookInstalled.compareAndSet(false, true))
-      AgeSecretManager.onChange(() => refreshAll())
+  /** Install the age functions, `age_secrets()` and the `age_secrets`
+    * view on a session. Idempotent; the view re-reads the table function
+    * on every query. */
+  def register(spark: SparkSession): Unit = {
+    val state = spark.sessionState
+    entries.foreach(_.installIn(state.functionRegistry))
+    secretsTable.installIn(state.tableFunctionRegistry)
+    if (state.catalog.getTempView("age_secrets").isEmpty)
+      spark.sql("CREATE OR REPLACE TEMP VIEW age_secrets AS SELECT * FROM age_secrets()")
   }
-
-  private def refreshSecretsView(spark: SparkSession): Unit = {
-    import spark.implicits._
-    AgeSecretManager.list.toDF("name", "type", "provider", "key_id")
-      .createOrReplaceTempView("age_secrets")
-  }
-
-  private def refreshAll(): Unit =
-    sessions.forEach { (s, _) =>
-      if (s.sparkContext.isStopped) sessions.remove(s) // don't pin dead sessions
-      else register(s)
-    }
 }

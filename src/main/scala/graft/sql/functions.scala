@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions.call_udf
   * operators work in `select`/`withColumn` chains without SQL strings.
   * Requires `AgeFunctions.register(spark)` once per session (the DDL
   * extension does not auto-register, mirroring the reference's explicit
-  * `LOAD 'age'`). */
+  * `LOAD 'age'`). Registration is stateless and secret names bind when the
+  * query is analysed, so a column built here sees every CREATE/DROP SECRET
+  * made before its DataFrame is created, in any session. */
 object functions {
   /** Encrypt for one recipient (raw `age1…` key or secret name). */
   def age_encrypt(data: Column, recipient: Column): Column =

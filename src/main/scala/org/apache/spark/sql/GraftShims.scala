@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * supported pattern for third-party Catalyst expression libraries
@@ -25,4 +25,10 @@ object GraftShims {
   def dataFrameOf(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `f` applied to `children` as the expression `spark.udf.register`
+    * would build. */
+  def scalaUdf(f: expressions.UserDefinedFunction, children: Seq[Expression]): ScalaUDF =
+    classic.UserDefinedFunctionUtils.toScalaUDF(
+      f.asInstanceOf[expressions.SparkUserDefinedFunction], children)
 }

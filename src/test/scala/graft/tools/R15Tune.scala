@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   *    the gate's pinned runtime-bloom demo config, so the headline table
   *    stops carrying a self-inflicted 18×.
   *
-  * Pair with tools/bench_duckdb_r15.py in the same sitting (best-of-3
+  * Pair with tools/bench_duckdb.py given this tool's query list in the
+  * same sitting (best-of-3
   * warmed noop vs best-of-3 fetchall, idle box — the r14 convention).
   */
 object R15Tune {

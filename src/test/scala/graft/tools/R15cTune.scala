@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** sf10 measurements for the round-15 operators (dd25/tx31/mm13/q67;
   * q68's query phase is measured in R15Tune) — new gate queries should
   * carry scale numbers, not just correctness. Pair with
-  * tools/bench_duckdb_r15c.py, same sitting. */
+  * tools/bench_duckdb.py given this tool's query list, same sitting. */
 object R15cTune {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/localdata/sf10m")

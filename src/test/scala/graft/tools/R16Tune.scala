@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *   - q59/q60/q68 query phases over the narrowed long-only layout,
   *   - q59 with replaceHashWithSortAgg (bucket-sorted input → streaming
   *     sort aggregate, no hash table).
-  * Pair with tools/bench_duckdb_r15c.py-style DuckDB runs, same sitting. */
+  * Pair with tools/bench_duckdb.py given this tool's query list, same sitting. */
 object R16Tune {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/localdata/sf10m")

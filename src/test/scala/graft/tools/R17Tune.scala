@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions._
   *  - "scan"   — q25/q08 under reader-batch levers (columnarReaderBatchSize
   *               4k vs 16k) to close out the #2 floor ladder.
   *
-  * Pair with tools/bench_duckdb_r17.py in the same sitting.
+  * Pair with tools/bench_duckdb.py given this tool's query list in the
+  * same sitting.
   */
 object R17Tune {
   def main(args: Array[String]): Unit = {
