@@ -122,12 +122,12 @@ object AgeSecretManager {
   /** The current registry, for binding into a query at analysis time. */
   def snapshot: Map[String, AgeSecret] = secrets
 
-  /** Redacted listing rows, the `duckdb_secrets()` equivalent
-    * (test/sql/age_secret.test:22-26). The reference carries key_id in the
-    * secret's named-value map (age_secret.test:31-35 creates with key_id),
-    * so the listing surfaces it; keys stay redacted. */
-  def list: Seq[(String, String, String, String)] =
-    secrets.toSeq.sortBy(_._1).map { case (n, s) => (n, "age", "config", s.keyId.getOrElse("")) }
+  /** Redacted listing rows of one registry map, the `duckdb_secrets()`
+    * equivalent (test/sql/age_secret.test:22-26). The reference carries
+    * key_id in the secret's named-value map (age_secret.test:31-35 creates
+    * with key_id), so the listing surfaces it; keys stay redacted. */
+  def list(registry: Map[String, AgeSecret]): Seq[(String, String, String, String)] =
+    registry.toSeq.sortBy(_._1).map { case (n, s) => (n, "age", "config", s.keyId.getOrElse("")) }
 
   def clear(): Unit = synchronized { secrets = Map.empty }
 }

@@ -192,11 +192,13 @@ class AgeDdlParser(delegate: ParserInterface) extends ParserInterface {
     delegate.parseRoutineParam(sqlText)
 }
 
-/** One SQL function graft installs: its name, its usage line, and the
-  * builder Catalyst calls with the argument expressions whenever a query
-  * resolves the name. `usage` starts with the signature `name(p1, …)`,
-  * which fixes the arity checked before `build` runs. */
-final case class SqlFunction[T](name: String, usage: String, build: Seq[Expression] => T) {
+/** One SQL function graft installs: its name, the class it builds (what
+  * DESCRIBE FUNCTION reports), its usage line, and the builder Catalyst
+  * calls with the argument expressions whenever a query resolves the name.
+  * `usage` starts with the signature `name(p1, …)`, which fixes the arity
+  * checked before `build` runs. */
+final case class SqlFunction[T](name: String, impl: Class[_], usage: String,
+                                build: Seq[Expression] => T) {
   private val signature = usage.take(usage.indexOf(')') + 1)
   private val arity = signature.drop(name.length + 1).dropRight(1).split(',').count(_.trim.nonEmpty)
 
@@ -210,7 +212,7 @@ final case class SqlFunction[T](name: String, usage: String, build: Seq[Expressi
 
   // one instance each, so installing into a registry again is a silent no-op
   val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => T) =
-    (FunctionIdentifier(name), new ExpressionInfo(classOf[SqlFunction[_]].getName, name, usage),
+    (FunctionIdentifier(name), new ExpressionInfo(impl.getName, name, usage),
       checked)
 
   def installIn(registry: FunctionRegistryBase[T]): Unit = {
@@ -258,31 +260,31 @@ object GraftSparkExtensions {
     * (not just the Scala DSL). The analyzer wraps a returned
     * AggregateFunction in a Complete AggregateExpression itself. */
   val natives: Seq[SqlFunction[Expression]] = Seq(
-    SqlFunction("cosine_sim",
+    SqlFunction("cosine_sim", classOf[CosineSim],
       "cosine_sim(a, b) - codegen cosine similarity of two float/double arrays",
       a => CosineSim(a(0), a(1))),
-    SqlFunction("cosine_sim_pair",
+    SqlFunction("cosine_sim_pair", classOf[CosineSimPair],
       "cosine_sim_pair(a, b, prefix_len) - struct(full, prefix) cosine from one " +
         "vector traversal; prefix_len must be an integer literal",
       a => CosineSimPair(a(0), a(1), intLit("cosine_sim_pair", "prefix_len", a(2)))),
-    SqlFunction("token_stats",
+    SqlFunction("token_stats", classOf[TokenStats],
       "token_stats(text) - [n_tokens, n_subwords, n_chars] per row, split-on-space semantics",
       a => TokenStats(a(0))),
-    SqlFunction("repetition_stats",
+    SqlFunction("repetition_stats", classOf[RepetitionStats],
       "repetition_stats(text) - [top2gram_count, n_2grams, top3gram_count, " +
         "n_3grams] per row, split-on-space word-gram semantics",
       a => RepetitionStats(a(0))),
-    SqlFunction("band_keys",
+    SqlFunction("band_keys", classOf[BandKeys],
       "band_keys(vec, n_planes, band_size) - LSH band keys of a float/double " +
         "array; n_planes and band_size must be integer literals",
       a => BandKeys(a(0), intLit("band_keys", "n_planes", a(1)),
         intLit("band_keys", "band_size", a(2)))),
-    SqlFunction("substring_run_fps",
+    SqlFunction("substring_run_fps", classOf[SubstringRunFps],
       "substring_run_fps(text, w) - md5 hex fingerprint per w-token " +
         "window (array index = window start token), one zero-copy byte " +
         "pass; w must be an integer literal",
       a => SubstringRunFps(a(0), intLit("substring_run_fps", "w", a(1), min = 1))),
-    SqlFunction("audio_fp",
+    SqlFunction("audio_fp", classOf[AudioFp],
       "audio_fp(pcm, frame_samples, n_frames, threshold) - packed-bits " +
         "LONG fingerprint of a 16-bit LE PCM binary payload (bit f set " +
         "iff frame f's integer energy exceeds threshold), one byte " +
@@ -292,32 +294,32 @@ object GraftSparkExtensions {
           case Literal(v: Long, LongType) => v
           case e => intLit("audio_fp", "threshold", e).toLong
         })),
-    SqlFunction("cdc_chunks",
+    SqlFunction("cdc_chunks", classOf[CdcChunks],
       "cdc_chunks(text, mod) - content-defined-chunking ledger " +
         "array<struct<chunk, fp, n_chars>> per document (h28-mod " +
         "boundary words end their chunk), one byte pass; mod must be " +
         "an integer literal",
       a => CdcChunks(a(0), intLit("cdc_chunks", "mod", a(1), min = 1))),
-    SqlFunction("minhash_sig",
+    SqlFunction("minhash_sig", classOf[MinHashSig],
       "minhash_sig(text) - one-pass K=8 MinHash signature of the document's " +
         "3-word shingle set (null when the document has fewer than 3 words)",
       a => MinHashSig(a(0))),
-    SqlFunction("minhash_agg",
+    SqlFunction("minhash_agg", classOf[MinHashAgg],
       "minhash_agg(hash) - K-permutation MinHash signature of a group of 28-bit hashes",
       a => MinHashAgg(a(0))),
-    SqlFunction("simhash_agg",
+    SqlFunction("simhash_agg", classOf[SimHashAgg],
       "simhash_agg(h1, h2) - 56-bit SimHash of a group of paired 28-bit word hashes",
       a => SimHashAgg(a(0), a(1))),
-    SqlFunction("cms_agg",
+    SqlFunction("cms_agg", classOf[CmsAgg],
       "cms_agg(hash) - 4x256 Count-Min-Sketch counter grid over 28-bit item hashes",
       a => CmsAgg(a(0))),
-    SqlFunction("sum128_agg",
+    SqlFunction("sum128_agg", classOf[Sum128Agg],
       "sum128_agg(x) - exact 128-bit integer SUM of a BIGINT column, emitted as decimal digits",
       a => Sum128Agg(a(0))),
-    SqlFunction("bitmap_distinct",
+    SqlFunction("bitmap_distinct", classOf[BitmapDistinct],
       "bitmap_distinct(c) - exact COUNT(DISTINCT) of an integral/date column via paged bitmaps",
       a => BitmapDistinct(a(0))),
-    SqlFunction("topk_agg",
+    SqlFunction("topk_agg", classOf[TopKAgg],
       "topk_agg(score, id, k) - bounded-heap top-k (score desc, id asc); k must be an integer literal",
       a => TopKAgg(a(0), a(1), intLit("topk_agg", "k", a(2)))))
 }

@@ -2,9 +2,10 @@ package graft.sql
 
 import graft.core._
 import graft.secrets.{AgeSecret, AgeSecretManager}
+import java.lang.ref.WeakReference
 import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
@@ -21,13 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * constant-folded or re-ordered by Catalyst (the reference never declares
   * this to DuckDB — a latent bug there; Spark lets us do it right).
   *
-  * Secret names bind when a query is analysed: the builder of each
+  * Secret names bind when a query is analysed: the first call of a
   * function that resolves secret names reads AgeSecretManager's current
-  * immutable map and closes that call's expression over it, so executors
-  * receive the keys with the task — the distributed equivalent of the
-  * reference's per-row catalog lookup (src/age_extension.cpp:229-256,
-  * 292-320). Registration is stateless: a CREATE or DROP SECRET is seen by
-  * the next query of every session without registering again.
+  * immutable map, every such call of that analysis closes its expression
+  * over the same map, and executors receive the keys with the task — the
+  * distributed equivalent of the reference's per-row catalog lookup
+  * (src/age_extension.cpp:229-256, 292-320). Registration is stateless: a
+  * CREATE or DROP SECRET is seen by the next query of every session
+  * without registering again.
   */
 object AgeFunctions {
   final case class AgeKeyPairRow(public_key: String, private_key: String)
@@ -107,17 +109,43 @@ object AgeFunctions {
 
   private def fixed(name: String, usage: String, f: UserDefinedFunction): SqlFunction[Expression] = {
     val named = f.withName(name)
-    SqlFunction(name, usage, args => GraftShims.scalaUdf(named, args))
+    SqlFunction(name, classOf[ScalaUDF], usage, args => GraftShims.scalaUdf(named, args))
   }
 
-  /** A function over the registry as of each call's analysis: `kernel`
-    * closes over the current map, `toUdf` builds types, encoders and flags
-    * once, and each call swaps its own closure in. */
-  private def bound[F <: AnyRef](name: String, usage: String)(kernel: Secrets => F)(
-      toUdf: F => UserDefinedFunction): SqlFunction[Expression] = {
-    val template = toUdf(kernel(Map.empty)).withName(name)
-    SqlFunction(name, usage,
-      args => GraftShims.scalaUdf(template, args).copy(function = kernel(AgeSecretManager.snapshot)))
+  /** `kernel` closed over one registry map. A ScalaUDF's equality includes
+    * its function, and this one compares by name and map: two calls bound
+    * to equal maps are one expression to GROUP BY, subexpression
+    * elimination and cached-plan matching. */
+  private final case class Bound[A, B, R](name: String, secrets: Secrets)(
+      kernel: (A, B, Secrets) => R) extends ((A, B) => R) {
+    def apply(a: A, b: B): R = kernel(a, b, secrets)
+    override def toString: String = name
+  }
+
+  // the map the analysis run on this thread pinned at its first bound call
+  private val pinned = new ThreadLocal[(WeakReference[AnyRef], Secrets)]
+
+  /** The registry map for a call being analysed: read once per analysis
+    * run (its subqueries and views included), so one query sees one map. */
+  private def analysisSnapshot(): Secrets = GraftShims.analysisScope match {
+    case None => AgeSecretManager.snapshot
+    case Some(scope) => pinned.get match {
+      case (ref, secrets) if ref.get eq scope => secrets
+      case _ =>
+        val secrets = AgeSecretManager.snapshot
+        pinned.set((new WeakReference(scope), secrets))
+        secrets
+    }
+  }
+
+  /** A function over the registry as of its query's analysis: `toUdf`
+    * builds types, encoders and flags once, and each call swaps in the
+    * kernel bound to the analysis snapshot. */
+  private def bound[A, B, R](name: String, usage: String)(kernel: (A, B, Secrets) => R)(
+      toUdf: ((A, B) => R) => UserDefinedFunction): SqlFunction[Expression] = {
+    val template = toUdf(Bound(name, Map.empty)(kernel)).withName(name)
+    SqlFunction(name, classOf[ScalaUDF], usage, args =>
+      GraftShims.scalaUdf(template, args).copy(function = Bound(name, analysisSnapshot())(kernel)))
   }
 
   /** The age entries of graft's SQL function table. */
@@ -131,30 +159,26 @@ object AgeFunctions {
         val kp = AgeKeys.fromSeed(seed); AgeKeyPairRow(kp.publicKey, kp.privateKey)
       })),
     bound("age_encrypt",
-      "age_encrypt(data, recipient) - encrypt for one age1 key or secret name") { secrets =>
-      (data: Array[Byte], recipient: String) => encryptImpl(data, recipient, secrets)
-    }(udf(_).asNondeterministic()),
+      "age_encrypt(data, recipient) - encrypt for one age1 key or secret name")(
+      encryptImpl)(udf(_).asNondeterministic()),
     bound("age_encrypt_armor",
-      "age_encrypt_armor(data, recipient) - age_encrypt as ASCII-armored text") { secrets =>
-      (data: Array[Byte], recipient: String) =>
+      "age_encrypt_armor(data, recipient) - age_encrypt as ASCII-armored text") {
+      (data: Array[Byte], recipient: String, secrets: Secrets) =>
         if (data == null || recipient == null) null
         else AgeFormat.armor(encryptImpl(data, recipient, secrets))
     }(udf(_).asNondeterministic()),
     bound("age_decrypt",
-      "age_decrypt(data, identity) - decrypt with one AGE-SECRET-KEY-1 key or secret name") {
-      secrets => (data: Array[Byte], identity: String) => decryptImpl(data, identity, secrets)
-    }(udf(_)),
+      "age_decrypt(data, identity) - decrypt with one AGE-SECRET-KEY-1 key or secret name")(
+      decryptImpl)(udf(_)),
     bound("age_try_decrypt",
-      "age_try_decrypt(data, identity) - age_decrypt, NULL instead of an error") { secrets =>
-      (data: Array[Byte], identity: String) =>
+      "age_try_decrypt(data, identity) - age_decrypt, NULL instead of an error") {
+      (data: Array[Byte], identity: String, secrets: Secrets) =>
         try decryptImpl(data, identity, secrets)
         catch { case _: AgeInvalidInputException => null }
     }(udf(_)),
     bound("age_encrypt_multi",
-      "age_encrypt_multi(data, recipients) - encrypt for an array of keys or secret names") {
-      secrets => (data: Array[Byte], recipients: Seq[String]) =>
-        encryptMultiImpl(data, recipients, secrets)
-    }(udf(_).asNondeterministic()),
+      "age_encrypt_multi(data, recipients) - encrypt for an array of keys or secret names")(
+      encryptMultiImpl)(udf(_).asNondeterministic()),
     // passphrase (scrypt stanza) surface — age spec coverage beyond the
     // reference's X25519-only recipients; decrypt auto-detects armor
     fixed("age_encrypt_pass", "age_encrypt_pass(data, passphrase) - passphrase encryption",
@@ -168,16 +192,17 @@ object AgeFunctions {
         else AgeFormat.decryptWithPassphrase(data, passphrase))),
     fixed("age_version", "age_version() - engine version string", udf(() => versionString)))
 
-  /** `age_secrets()`: the registry's redacted listing as of the query's
-    * analysis — the `duckdb_secrets()` equivalent. */
-  private[sql] val secretsTable: SqlFunction[LogicalPlan] = SqlFunction("age_secrets",
-    "age_secrets() - lists registered age secrets (name, type, provider, key_id)", _ => {
-      val output = Seq("name", "type", "provider", "key_id")
-        .map(AttributeReference(_, StringType, nullable = false)())
-      LocalRelation(output, AgeSecretManager.list.map { case (n, t, p, k) =>
-        InternalRow(Seq(n, t, p, k).map(UTF8String.fromString): _*)
+  /** `age_secrets()`: the redacted listing of the query's analysis
+    * snapshot — the `duckdb_secrets()` equivalent. */
+  private[sql] val secretsTable: SqlFunction[LogicalPlan] =
+    SqlFunction("age_secrets", classOf[GraftSparkExtensions],
+      "age_secrets() - lists registered age secrets (name, type, provider, key_id)", _ => {
+        val output = Seq("name", "type", "provider", "key_id")
+          .map(AttributeReference(_, StringType, nullable = false)())
+        LocalRelation(output, AgeSecretManager.list(analysisSnapshot()).map {
+          case (n, t, p, k) => InternalRow(Seq(n, t, p, k).map(UTF8String.fromString): _*)
+        })
       })
-    })
 
   /** Install the age functions, `age_secrets()` and the `age_secrets`
     * view on a session. Idempotent; the view re-reads the table function

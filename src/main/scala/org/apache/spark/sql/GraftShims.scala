@@ -31,4 +31,11 @@ object GraftShims {
   def scalaUdf(f: expressions.UserDefinedFunction, children: Seq[Expression]): ScalaUDF =
     classic.UserDefinedFunctionUtils.toScalaUDF(
       f.asInstanceOf[expressions.SparkUserDefinedFunction], children)
+
+  /** An object unique to the analysis run in progress on this thread and
+    * shared by the subqueries and views it resolves; None outside analysis. */
+  def analysisScope: Option[AnyRef] = {
+    val ctx = catalyst.analysis.AnalysisContext.get
+    if (ctx.isDefault) None else Some(ctx.relationCache)
+  }
 }

@@ -5,6 +5,9 @@ import graft.core.AgeKeys
 import graft.secrets.{AgeSecretManager, AgeSecretOptions}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal, ScalaUDF}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -131,5 +134,69 @@ class SecretBindingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = intercept[Throwable](spark.sql("SELECT age_encrypt(CAST('x' AS BINARY))").collect())
     assert(messages(e).exists(_.contains("age_encrypt(data, recipient) takes exactly 2 arguments")),
       messages(e))
+  }
+
+  test("calls bound to one map are one expression: GROUP BY, repeated calls, cached views") {
+    val kp = AgeKeys.fromSeed("group-by".getBytes("UTF-8"))
+    spark.sql(s"CREATE SECRET grp_k (TYPE age, " +
+      s"PUBLIC_KEY '${kp.publicKey}', PRIVATE_KEY '${kp.privateKey}')")
+    val session = spark
+    import session.implicits._
+    try {
+      Seq("a", "b", "a").map(t => spark.sql(s"SELECT age_encrypt(CAST('$t' AS BINARY), 'grp_k')")
+        .head().getAs[Array[Byte]](0)).toDF("ct").createOrReplaceTempView("grp_ct")
+      val counts = spark.sql("SELECT CAST(age_decrypt(ct, 'grp_k') AS STRING), count(*) " +
+        "FROM grp_ct GROUP BY age_decrypt(ct, 'grp_k')").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(counts == Map("a" -> 2L, "b" -> 1L))
+      for (fn <- Seq("age_decrypt", "age_try_decrypt")) {
+        val calls = spark.sql(s"SELECT $fn(ct, 'grp_k') AS x, $fn(ct, 'grp_k') AS y FROM grp_ct")
+          .queryExecution.analyzed.expressions.flatMap(_.collect { case u: ScalaUDF => u })
+        assert(calls.size == 2 && calls(0).semanticEquals(calls(1)), fn)
+      }
+      spark.sql("CREATE OR REPLACE TEMP VIEW grp_dec AS " +
+        "SELECT CAST(age_decrypt(ct, 'grp_k') AS STRING) AS t FROM grp_ct")
+      spark.sql("CACHE TABLE grp_dec")
+      val read = spark.sql("SELECT t FROM grp_dec")
+      assert(read.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.nonEmpty,
+        read.queryExecution.withCachedData)
+      assert(read.collect().map(_.getString(0)).sorted.toSeq == Seq("a", "a", "b"))
+    } finally {
+      spark.sql("UNCACHE TABLE IF EXISTS grp_dec")
+      spark.sql("DROP VIEW IF EXISTS grp_dec")
+      spark.sql("DROP VIEW IF EXISTS grp_ct")
+      AgeSecretManager.drop("grp_k")
+    }
+  }
+
+  test("one analysis binds one map even when a CREATE lands during it") {
+    val pub = AgeKeys.fromSeed("pinned".getBytes("UTF-8")).publicKey
+    AgeSecretManager.create("pin_k", AgeSecretOptions(publicKey = Some(pub)))
+    // a function whose builder creates a secret while its query is analysed
+    val createLate = FunctionIdentifier("pin_create_late")
+    spark.sessionState.functionRegistry.registerFunction(createLate,
+      new ExpressionInfo(classOf[Literal].getName, "pin_create_late"), _ => {
+        AgeSecretManager.create("pin_late", AgeSecretOptions(publicKey = Some(pub)), replace = true)
+        Literal(1)
+      })
+    try {
+      val e = intercept[Throwable](spark.sql("SELECT age_encrypt(CAST('x' AS BINARY), 'pin_k'), " +
+        "pin_create_late(), age_encrypt(CAST('x' AS BINARY), 'pin_late')").collect())
+      assert(messages(e).exists(_.contains("Invalid age recipient key: pin_late")), messages(e))
+      assert(spark.sql("SELECT age_encrypt(CAST('x' AS BINARY), 'pin_late') IS NOT NULL")
+        .head().getBoolean(0))
+    } finally {
+      spark.sessionState.functionRegistry.dropFunction(createLate)
+      AgeSecretManager.drop("pin_k")
+      AgeSecretManager.drop("pin_late")
+    }
+  }
+
+  test("DESCRIBE FUNCTION reports the class each entry builds") {
+    assert(spark.catalog.getFunction("cosine_sim").className ==
+      classOf[graft.functions.CosineSim].getName)
+    assert(spark.catalog.getFunction("topk_agg").className ==
+      classOf[graft.functions.TopKAgg].getName)
+    assert(spark.catalog.getFunction("age_decrypt").className == classOf[ScalaUDF].getName)
   }
 }
