@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Connected components WITHOUT GraphX: alternating large-star/small-star
@@ -18,10 +18,14 @@ import org.apache.spark.sql.functions._
   * DuckDB recursive min-label CTE is gate-checked by graph09; label-level
   * equality at scale by Graph09Probe).
   *
-  * Each round is localCheckpointed (tx31's lineage-truncation discipline:
-  * iterative lazy plans otherwise grow super-linearly in analysis cost);
-  * convergence is a 2-value (count, hash-sum) fixpoint certificate — one
-  * bounded 1-row collect per round, never corpus-sized.
+  * A round is two jobs: largeStar's output is checkpointed, then
+  * smallStar's (tx31's lineage-truncation discipline: iterative lazy plans
+  * otherwise grow super-linearly in analysis cost). smallStar reads its
+  * input three times (mins, join, union), so the first checkpoint keeps
+  * largeStar's exchanges from running three times over. Convergence is a
+  * 2-value (count, xor-of-hashes) fixpoint certificate, computed as
+  * observed metrics inside smallStar's checkpoint job: no job of its own,
+  * never corpus-sized.
   *
   * Fault stance: by default round state is localCheckpointed — executor
   * blocks with truncated lineage, persisted at 2× replication, so
@@ -31,8 +35,9 @@ import org.apache.spark.sql.functions._
   * replicas of a live round block and the job fails loudly (never a
   * wrong answer — lineage is truncated, nothing silently recomputes
   * differently). Pass `reliable = true` (with `sc.setCheckpointDir` on
-  * cluster storage) to make survival deterministic: each round is in the
-  * checkpoint dir and retried tasks re-read it — proven byte-identical
+  * cluster storage) to make survival deterministic: both star steps of
+  * every round are written to the checkpoint dir (two checkpoints per
+  * round) and retried tasks re-read them — proven byte-identical
   * under mid-fixpoint executor SIGKILL by StarCcFaultLane (CLUSTER.md
   * r16d). Same algorithm; only durability of per-round state moves.
   * Reliable-mode round files stay in the checkpoint dir until application
@@ -58,13 +63,6 @@ object StarCC {
     * rejected v1 localCheckpoint barrier cost 2.7× on a uniform graph;
     * this costs ~3%). Only paid when the caller asks for `skewSafe`. */
   private def reExchange(mins: DataFrame): DataFrame =
-    // LAZY partitioning break: greatest(u,u) is value-identical for every
-    // long but is an expression, not an attribute, so the aggregate's
-    // hash(u) output partitioning does not propagate through the project
-    // and EnsureRequirements plans a FRESH exchange under the join's Sort
-    // — the shape OptimizeSkewedJoin matches — without materializing
-    // anything or breaking upstream ReusedExchange sharing (the earlier
-    // localCheckpoint barrier cost 23.4→62.7 s on a uniform 8M-edge graph)
     mins.select(greatest(col("u"), col("u")).as("u"), col("m"))
 
   /** Degree-profile decision for [[labelsAuto]] (VERDICT r17 #5): the
@@ -155,7 +153,6 @@ object StarCC {
   def labels(edges: DataFrame, maxIter: Int = 50,
              reliable: Boolean = false, skewSafe: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
     if (reliable) require(spark.sparkContext.getCheckpointDir.isDefined,
       "StarCC.labels(reliable = true) needs spark.sparkContext.setCheckpointDir " +
         "pointing at storage every executor can read")
@@ -169,19 +166,19 @@ object StarCC {
       .where(col("src") =!= col("dst")))
 
     var e = pairs
-    var prev = (-1L, -1L)
+    var prev = Map.empty[String, Any]
     var converged = false
     var it = 0
     while (!converged && it < maxIter) { // O(log n) expected; cap = backstop
-      val next = ckpt(smallStar(largeStar(e, skewSafe), skewSafe))
-      // (count, xor-of-hashes) set certificate: bit_xor is order-
-      // independent and cannot overflow under ANSI mode (edges are
-      // distinct, so set semantics are exact up to hash collision; a
-      // false "converged" would surface as an oracle mismatch).
-      val chk = next
-        .agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)))
-        .as[(Long, Long)].head() // 1-row convergence certificate
+      // (count, xor-of-hashes) set certificate, observed in the smallStar
+      // checkpoint's own job: bit_xor is order-independent and cannot
+      // overflow under ANSI mode (edges are distinct, so set semantics are
+      // exact up to hash collision; a false "converged" would surface as an
+      // oracle mismatch). An empty round observes (0, NULL) twice and stops.
+      val cert = Observation()
+      val next = ckpt(smallStar(ckpt(largeStar(e, skewSafe)), skewSafe)
+        .observe(cert, count(lit(1)).as("n"), bit_xor(xxhash64(col("src"), col("dst"))).as("h")))
+      val chk = cert.get
       converged = chk == prev
       prev = chk
       // superseded rounds: the driver drops its reference here and the

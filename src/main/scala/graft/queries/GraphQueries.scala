@@ -327,11 +327,12 @@ object GraphQueries {
     // O(log n) rounds. Invariant maintained by both steps: every emitted
     // edge points strictly downward (src > dst), so the fixpoint is
     // exactly a disjoint union of stars rooted at component minima —
-    // the same min-label semantics GraphX CC produces. Each round is
-    // localCheckpointed (tx31's lineage-truncation discipline: iterative
-    // plans otherwise grow super-linearly in analysis cost); convergence
-    // is a 2-value (count, hash-sum) fixpoint certificate — a bounded
-    // 1-row collect per round, never corpus-sized. Runs on the SAME
+    // the same min-label semantics GraphX CC produces. A round is two
+    // localCheckpoint jobs, one per star step (tx31's lineage-truncation
+    // discipline; smallStar then scans stored largeStar output instead of
+    // re-running it for each of its three reads); convergence is a
+    // 2-value (count, xor-of-hashes) fixpoint certificate observed as
+    // metrics of the smallStar job, never corpus-sized. Runs on the SAME
     // bounded minhash-LSH near-dup edge set as dd09 and emits the SAME
     // (root, n_docs, max_doc) relation, so GraphX CC (dd09), star CC
     // (this), and DuckDB's recursive min-label CTE are mutually
@@ -363,12 +364,13 @@ object GraphQueries {
     // at r — so the oracle is pure arithmetic (no recursive CTE, unlike
     // graph09's), and what the gate checks is that the skewSafe rounds
     // (mins re-exchanged through the lazy greatest(u,u) partitioning
-    // break each half-round) are label-identical to the closed form at
-    // every sf. src is written pmod(v,1) (= 0 for the non-negative keys)
-    // rather than lit(0): a literal alias under Union trips Spark 4.1's
-    // constraint rewriting (key not found: src#N — StarCcSkewProbe hit
-    // it; probe disables propagation, a gate query must not need session
-    // surgery). r18 (ADVICE r17): the hub root 0 is a graph vertex BY
+    // break inside each star step's checkpoint job, two per round) are
+    // label-identical to the closed form at every sf. src is written
+    // pmod(v,1) (= 0 for the non-negative keys) rather than lit(0): a
+    // literal alias under Union trips Spark 4.1's constraint rewriting
+    // (key not found: src#N — StarCcSkewProbe hit it; probe disables
+    // propagation, a gate query must not need session surgery). r18
+    // (ADVICE r17): the hub root 0 is a graph vertex BY
     // CONSTRUCTION (verts ∪ {0}, mirrored in the oracle) instead of
     // relying on 0-based custkeys, and the result counts over VERTS with
     // isolated vertices rooting at themselves — so the gate holds on
