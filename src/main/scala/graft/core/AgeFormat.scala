@@ -320,13 +320,17 @@ object AgeFormat {
 
   /** Decrypt with one identity (32-byte private scalar). Error messages
     * mirror rust/src/lib.rs:188 (`Decryption failed: <cause>`). */
-  def decrypt(ciphertext0: Array[Byte], identityScalar: Array[Byte]): Array[Byte] = {
+  def decrypt(ciphertext: Array[Byte], identityScalar: Array[Byte]): Array[Byte] =
+    decrypt(ciphertext, identityScalar, X25519.derivePublic(identityScalar))
+
+  /** [[decrypt]] with the identity's public key already derived, for
+    * callers that decrypt many values with one key. */
+  def decrypt(ciphertext0: Array[Byte], scalar: Array[Byte],
+              ourPub: Array[Byte]): Array[Byte] = {
     val ciphertext = if (isArmored(ciphertext0)) dearmor(ciphertext0) else ciphertext0
     val h = parseHeader(ciphertext)
 
     // --- unwrap the file key with our identity
-    val scalar = X25519.clamp(identityScalar)
-    val ourPub = X25519.derivePublic(scalar)
     var fileKey: Array[Byte] = null
     h.stanzas.foreach { st =>
       if (fileKey == null && st.args.headOption.contains("X25519") && st.args.length == 2) {

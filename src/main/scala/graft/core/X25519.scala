@@ -5,20 +5,16 @@ import java.security.{KeyFactory, KeyPairGenerator}
 import java.security.interfaces.{XECPrivateKey, XECPublicKey}
 import java.security.spec.{NamedParameterSpec, XECPrivateKeySpec, XECPublicKeySpec}
 import javax.crypto.KeyAgreement
-import java.util.concurrent.ConcurrentHashMap
 
-/** X25519 (RFC 7748) on the JVM.
+/** X25519 (RFC 7748) on the JDK's XDH provider, graft's only curve code.
   *
-  * Diffie-Hellman goes through the JDK's optimized XDH provider
-  * (`KeyAgreement("XDH")`); scalar·basepoint (public-key derivation, which
-  * the JDK does not expose) is a BigInteger Montgomery ladder. Derived
-  * public keys are memoized per private scalar because age decryption
-  * re-derives the identity's public key per row (the reference does the
-  * same work inside the `age` crate per call, rust/src/lib.rs:145-212).
+  * The JDK exposes Diffie-Hellman (`KeyAgreement("XDH")`) but not
+  * scalar·basepoint, so public-key derivation is DH with the base point
+  * u = 9. Nothing here keeps state beyond per-thread provider instances:
+  * callers that reuse a key (the age SQL functions, once per key per
+  * task) hold its derived public key themselves.
   */
 object X25519 {
-  private val P = BigInteger.TWO.pow(255).subtract(BigInteger.valueOf(19))
-  private val A24 = BigInteger.valueOf(121665)
   private val paramSpec = NamedParameterSpec.X25519
 
   def clamp(scalar: Array[Byte]): Array[Byte] = {
@@ -30,75 +26,26 @@ object X25519 {
     s
   }
 
-  /** Little-endian 32 bytes → BigInteger, masking the top bit (u-coordinates). */
-  private def decodeLE(b: Array[Byte], maskHigh: Boolean): BigInteger = {
+  /** Little-endian 32-byte u-coordinate → BigInteger, top bit masked. */
+  private def decodeLE(b: Array[Byte]): BigInteger = {
     val be = b.reverse
-    if (maskHigh) be(0) = (be(0) & 0x7f).toByte
+    be(0) = (be(0) & 0x7f).toByte
     new BigInteger(1, be)
   }
 
+  /** A reduced u-coordinate (as the JDK's keys hold it) → 32 bytes LE. */
   private def encodeLE(n: BigInteger): Array[Byte] = {
-    val be = n.mod(P).toByteArray.dropWhile(_ == 0)
+    val be = n.toByteArray.dropWhile(_ == 0)
     val out = new Array[Byte](32)
     var i = 0
     while (i < be.length) { out(i) = be(be.length - 1 - i); i += 1 }
     out
   }
 
-  /** Constant-time-ish Montgomery ladder; fine for key derivation (not a
-    * side-channel-hardened path — DH itself uses the JDK provider). */
-  private def scalarMult(scalar: Array[Byte], uBytes: Array[Byte]): Array[Byte] = {
-    val k = decodeLE(clamp(scalar), maskHigh = false)
-    val u = decodeLE(uBytes, maskHigh = true)
-    var x1 = u
-    var x2 = BigInteger.ONE
-    var z2 = BigInteger.ZERO
-    var x3 = u
-    var z3 = BigInteger.ONE
-    var swap = 0
-    var t = 254
-    while (t >= 0) {
-      val kt = k.testBit(t)
-      val ktBit = if (kt) 1 else 0
-      if ((swap ^ ktBit) == 1) {
-        val tx = x2; x2 = x3; x3 = tx
-        val tz = z2; z2 = z3; z3 = tz
-      }
-      swap = ktBit
-      val a = x2.add(z2).mod(P)
-      val aa = a.multiply(a).mod(P)
-      val b = x2.subtract(z2).mod(P)
-      val bb = b.multiply(b).mod(P)
-      val e = aa.subtract(bb).mod(P)
-      val c = x3.add(z3).mod(P)
-      val d = x3.subtract(z3).mod(P)
-      val da = d.multiply(a).mod(P)
-      val cb = c.multiply(b).mod(P)
-      val s1 = da.add(cb).mod(P)
-      x3 = s1.multiply(s1).mod(P)
-      val s2 = da.subtract(cb).mod(P)
-      z3 = x1.multiply(s2.multiply(s2).mod(P)).mod(P)
-      x2 = aa.multiply(bb).mod(P)
-      z2 = e.multiply(aa.add(A24.multiply(e)).mod(P)).mod(P)
-      t -= 1
-    }
-    if (swap == 1) { x2 = x3; z2 = z3 }
-    encodeLE(x2.multiply(z2.modPow(P.subtract(BigInteger.TWO), P)).mod(P))
-  }
-
   private val basepoint: Array[Byte] = { val b = new Array[Byte](32); b(0) = 9; b }
 
-  private val pubCache = new ConcurrentHashMap[java.math.BigInteger, Array[Byte]]()
-
-  /** Public key (u-coordinate, 32 bytes LE) for a private scalar. Memoized. */
-  def derivePublic(scalar: Array[Byte]): Array[Byte] = {
-    val key = decodeLE(clamp(scalar), maskHigh = false)
-    val cached = pubCache.get(key)
-    if (cached != null) return cached.clone()
-    val pub = scalarMult(scalar, basepoint)
-    if (pubCache.size < 4096) pubCache.put(key, pub.clone())
-    pub
-  }
+  /** Public key (u-coordinate, 32 bytes LE) for a private scalar. */
+  def derivePublic(scalar: Array[Byte]): Array[Byte] = sharedSecret(scalar, basepoint)
 
   // Per-thread JDK service instances: getInstance() walks the provider
   // registry on every call, which dominates per-row DH cost when executor
@@ -123,8 +70,7 @@ object X25519 {
   def sharedSecret(privateScalar: Array[Byte], publicU: Array[Byte]): Array[Byte] = {
     val kf = kfTL.get()
     val priv = kf.generatePrivate(new XECPrivateKeySpec(paramSpec, clamp(privateScalar)))
-    val pub = kf.generatePublic(
-      new XECPublicKeySpec(paramSpec, decodeLE(publicU, maskHigh = true)))
+    val pub = kf.generatePublic(new XECPublicKeySpec(paramSpec, decodeLE(publicU)))
     val ka = kaTL.get()
     ka.init(priv)
     ka.doPhase(pub, true)

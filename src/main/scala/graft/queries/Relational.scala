@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** The relational surface (SURVEY.md §2B): the host-engine constructs the
   * reference's tests/docs exercise, expressed Spark-first (DataFrame API
@@ -70,7 +71,8 @@ object Relational {
       s0.conf.getOption(k).foreach(v => s.conf.set(k, v))
     }
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    val appThrKey = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+    val conf = s0.sessionState.conf
+    val appThr = SQLConf.RUNTIME_BLOOM_FILTER_APPLICATION_SIDE_SCAN_SIZE_THRESHOLD
     // r22: detect "caller left the gate at Spark's 10 GB default" by PARSED
     // byte value, not string equality — Spark 4.1 renders the unset default
     // as "10737418240b", so the string compare ("10GB") never matched and
@@ -80,10 +82,8 @@ object Relational {
     // the harness tools set builder-level confs, which masked it). The
     // PlanShapeSpec mechanism lock kept passing because it pins a
     // non-default 1KB threshold — the honored-pin path.
-    val appThrDefault = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(s0.conf.get(appThrKey)) == (10L << 30)
-    s.conf.set(appThrKey,
-      if (appThrDefault) "256MB" else s0.conf.get(appThrKey))
+    s.conf.set(appThr.key,
+      if (conf.getConf(appThr) == appThr.defaultValue.get) "256MB" else s0.conf.get(appThr.key))
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "512MB")
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems", "5000000")
     // r22: bitmap capped at 16.8M bits = 2 MB (was 134M bits = 16 MB).
@@ -104,9 +104,10 @@ object Relational {
     // A caller-pinned non-default value is honored (same contract as the
     // application-side gate above) so measurement harnesses can A/B the
     // cap through the real production path.
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    s.conf.set(bitsKey,
-      if (s0.conf.get(bitsKey) == "67108864") "16777216" else s0.conf.get(bitsKey))
+    // Parsed like the gate above, never string-compared.
+    val bits = SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS
+    s.conf.set(bits.key,
+      if (conf.getConf(bits) == bits.defaultValue.get) "16777216" else s0.conf.get(bits.key))
     s
   }
 

@@ -36,54 +36,41 @@ object AgeFunctions {
 
   type Secrets = Map[String, AgeSecret]
 
-  // ---- per-row kernels (serializable pure functions over the bound map) ----
+  // ---- key resolution and per-row kernels ----
 
   /** src/age_extension.cpp:229-256 — non-"age1" strings resolve as secret
     * names; every lookup failure collapses to the same message the host
     * wrapper throws. */
-  private def resolveRecipient(k: String, secrets: Secrets): Array[Byte] = {
+  private def resolveRecipient(k: String, secrets: Secrets): Seq[Array[Byte]] = {
     val resolved =
       if (k.startsWith("age1")) k
       else secrets.get(k).flatMap(_.publicKey).getOrElse(
         throw new AgeInvalidInputException(
           s"Invalid age recipient key: $k (not a valid age key or secret name)"))
     AgeKeys.parseRecipient(resolved) match {
-      case Right(pub) => pub
+      case Right(pub) => Seq(pub)
       case Left(_) => // rust/src/lib.rs:83
         throw new AgeInvalidInputException(s"Invalid age recipient key: $resolved")
     }
   }
 
-  /** src/age_extension.cpp:292-320 + rust/src/lib.rs:199-212. */
-  private def resolveIdentity(k: String, secrets: Secrets): Array[Byte] = {
+  /** src/age_extension.cpp:292-320 + rust/src/lib.rs:199-212 → the
+    * identity's (scalar, public key). */
+  private def resolveIdentity(k: String, secrets: Secrets): (Array[Byte], Array[Byte]) = {
     val resolved =
       if (k.startsWith("AGE-SECRET-KEY-1")) k
       else secrets.get(k).flatMap(_.privateKey).getOrElse(
         throw new AgeInvalidInputException(
           s"Invalid age identity key: $k (not a valid age key or secret name)"))
     AgeKeys.parseIdentity(resolved) match {
-      case Right(id) => id
+      case Right(id) => (id, X25519.derivePublic(id))
       case Left(e) => // raw identity that fails bech32 → rust parse error path
         throw new AgeInvalidInputException(s"Decryption failed: invalid identity key ($e)")
     }
   }
 
-  // NULL inputs yield NULL, mirroring the host executors' null-skipping
-  // (src/age_extension.cpp:199, BinaryExecutor default null handling).
-  private[graft] def encryptImpl(data: Array[Byte], recipient: String,
-                                 secrets: Secrets): Array[Byte] =
-    if (data == null || recipient == null) null
-    else AgeFormat.encrypt(data, Seq(resolveRecipient(recipient, secrets)))
-
-  private[graft] def decryptImpl(data: Array[Byte], identity: String,
-                                 secrets: Secrets): Array[Byte] =
-    if (data == null || identity == null) null
-    else AgeFormat.decrypt(data, resolveIdentity(identity, secrets))
-
   /** src/age_extension.cpp:348-429 + rust/src/lib.rs:278-304. */
-  private[graft] def encryptMultiImpl(data: Array[Byte], recipients: Seq[String],
-                                      secrets: Secrets): Array[Byte] = {
-    if (data == null) return null
+  private def resolveRecipients(recipients: Seq[String], secrets: Secrets): Seq[Array[Byte]] = {
     if (recipients == null || recipients.isEmpty)
       throw new AgeInvalidInputException("Recipients list cannot be empty")
     val resolved = recipients.map { k =>
@@ -91,15 +78,31 @@ object AgeFunctions {
       else secrets.get(k).flatMap(_.publicKey).getOrElse(
         throw new AgeInvalidInputException(s"Invalid recipient: $k"))
     }
-    val parsed = resolved.zipWithIndex.map { case (k, i) =>
+    resolved.zipWithIndex.map { case (k, i) =>
       AgeKeys.parseRecipient(k) match {
         case Right(pub) => pub
         case Left(_) => // rust/src/lib.rs:285 (0-based position)
           throw new AgeInvalidInputException(s"Invalid recipient at position $i: $k")
       }
     }
-    AgeFormat.encrypt(data, parsed)
   }
+
+  // NULL inputs yield NULL, mirroring the host executors' null-skipping
+  // (src/age_extension.cpp:199, BinaryExecutor default null handling); a
+  // NULL-data row never resolves its key.
+  private def encryptImpl(data: Array[Byte], recipient: String,
+                          keys: String => Seq[Array[Byte]]): Array[Byte] =
+    if (data == null || recipient == null) null
+    else AgeFormat.encrypt(data, keys(recipient))
+
+  private def decryptImpl(data: Array[Byte], identity: String,
+                          keys: String => (Array[Byte], Array[Byte])): Array[Byte] =
+    if (data == null || identity == null) null
+    else { val (scalar, pub) = keys(identity); AgeFormat.decrypt(data, scalar, pub) }
+
+  private def encryptMultiImpl(data: Array[Byte], recipients: Seq[String],
+                               keys: Seq[String] => Seq[Array[Byte]]): Array[Byte] =
+    if (data == null) null else AgeFormat.encrypt(data, keys(recipients))
 
   /** Engine version string (reference: DuckDB::LibraryVersion(),
     * src/age_extension.cpp:432-437). */
@@ -112,13 +115,24 @@ object AgeFunctions {
     SqlFunction(name, classOf[ScalaUDF], usage, args => GraftShims.scalaUdf(named, args))
   }
 
-  /** `kernel` closed over one registry map. A ScalaUDF's equality includes
-    * its function, and this one compares by name and map: two calls bound
-    * to equal maps are one expression to GROUP BY, subexpression
-    * elimination and cached-plan matching. */
-  private final case class Bound[A, B, R](name: String, secrets: Secrets)(
-      kernel: (A, B, Secrets) => R) extends ((A, B) => R) {
-    def apply(a: A, b: B): R = kernel(a, b, secrets)
+  /** `kernel` closed over one registry map, its key argument resolved
+    * through `resolve`. A ScalaUDF's equality includes its function, and
+    * this one compares by name and map: two calls bound to equal maps are
+    * one expression to GROUP BY, subexpression elimination and cached-plan
+    * matching. The last key and what it resolved to are memoized; each
+    * task deserializes its own plan, so the memo is task-local and dies
+    * with the bound map. It is one immutable reference: a racing reader
+    * recomputes the entry instead of seeing a torn one. */
+  private final case class Bound[K, V, R](name: String, secrets: Secrets)(
+      resolve: (K, Secrets) => V, kernel: (Array[Byte], K, K => V) => R)
+      extends ((Array[Byte], K) => R) {
+    @transient private var memo: (K, V) = _
+    private val keys: K => V = k => {
+      val m = memo
+      if (m != null && m._1 == k) m._2
+      else { val v = resolve(k, secrets); memo = (k, v); v }
+    }
+    def apply(data: Array[Byte], k: K): R = kernel(data, k, keys)
     override def toString: String = name
   }
 
@@ -141,11 +155,12 @@ object AgeFunctions {
   /** A function over the registry as of its query's analysis: `toUdf`
     * builds types, encoders and flags once, and each call swaps in the
     * kernel bound to the analysis snapshot. */
-  private def bound[A, B, R](name: String, usage: String)(kernel: (A, B, Secrets) => R)(
-      toUdf: ((A, B) => R) => UserDefinedFunction): SqlFunction[Expression] = {
-    val template = toUdf(Bound(name, Map.empty)(kernel)).withName(name)
-    SqlFunction(name, classOf[ScalaUDF], usage, args =>
-      GraftShims.scalaUdf(template, args).copy(function = Bound(name, analysisSnapshot())(kernel)))
+  private def bound[K, V, R](name: String, usage: String)(resolve: (K, Secrets) => V)(
+      kernel: (Array[Byte], K, K => V) => R)(
+      toUdf: ((Array[Byte], K) => R) => UserDefinedFunction): SqlFunction[Expression] = {
+    val template = toUdf(Bound(name, Map.empty)(resolve, kernel)).withName(name)
+    SqlFunction(name, classOf[ScalaUDF], usage, args => GraftShims.scalaUdf(template, args)
+      .copy(function = Bound(name, analysisSnapshot())(resolve, kernel)))
   }
 
   /** The age entries of graft's SQL function table. */
@@ -160,25 +175,25 @@ object AgeFunctions {
       })),
     bound("age_encrypt",
       "age_encrypt(data, recipient) - encrypt for one age1 key or secret name")(
-      encryptImpl)(udf(_).asNondeterministic()),
+      resolveRecipient)(encryptImpl)(udf(_).asNondeterministic()),
     bound("age_encrypt_armor",
-      "age_encrypt_armor(data, recipient) - age_encrypt as ASCII-armored text") {
-      (data: Array[Byte], recipient: String, secrets: Secrets) =>
-        if (data == null || recipient == null) null
-        else AgeFormat.armor(encryptImpl(data, recipient, secrets))
+      "age_encrypt_armor(data, recipient) - age_encrypt as ASCII-armored text")(
+      resolveRecipient) { (data: Array[Byte], recipient: String, keys: String => Seq[Array[Byte]]) =>
+      if (data == null || recipient == null) null
+      else AgeFormat.armor(encryptImpl(data, recipient, keys))
     }(udf(_).asNondeterministic()),
     bound("age_decrypt",
       "age_decrypt(data, identity) - decrypt with one AGE-SECRET-KEY-1 key or secret name")(
-      decryptImpl)(udf(_)),
+      resolveIdentity)(decryptImpl)(udf(_)),
     bound("age_try_decrypt",
-      "age_try_decrypt(data, identity) - age_decrypt, NULL instead of an error") {
-      (data: Array[Byte], identity: String, secrets: Secrets) =>
-        try decryptImpl(data, identity, secrets)
-        catch { case _: AgeInvalidInputException => null }
+      "age_try_decrypt(data, identity) - age_decrypt, NULL instead of an error")(
+      resolveIdentity) { (data: Array[Byte], identity: String, keys: String => (Array[Byte], Array[Byte])) =>
+      try decryptImpl(data, identity, keys)
+      catch { case _: AgeInvalidInputException => null }
     }(udf(_)),
     bound("age_encrypt_multi",
       "age_encrypt_multi(data, recipients) - encrypt for an array of keys or secret names")(
-      encryptMultiImpl)(udf(_).asNondeterministic()),
+      resolveRecipients)(encryptMultiImpl)(udf(_).asNondeterministic()),
     // passphrase (scrypt stanza) surface — age spec coverage beyond the
     // reference's X25519-only recipients; decrypt auto-detects armor
     fixed("age_encrypt_pass", "age_encrypt_pass(data, passphrase) - passphrase encryption",

@@ -54,19 +54,33 @@ class CryptoCoreSpec extends AnyFunSuite {
     assert(toHex(X25519.sharedSecret(b, X25519.derivePublic(a))) == shared)
   }
 
-  // derivePublic is the hand-rolled Montgomery ladder; sharedSecret is the
-  // JDK XDH provider. Pin the two implementations to each other on random
-  // scalars: the ladder's a*G must equal the JDK's agreement of a with the
-  // base point (u=9) presented as a public key. A ladder bug would break
-  // interop with every other age implementation silently — this makes it
-  // loud on 100 seeded keys.
-  test("x25519 ladder vs JDK XDH: derivePublic == XDH(scalar, basepoint) on random scalars") {
-    val base = new Array[Byte](32); base(0) = 9
+  // DH symmetry on random keys: a·(b·9) == b·(a·9). derivePublic and
+  // sharedSecret are one JDK XDH path, so this pins derivation to DH; the
+  // RFC 7748 §6.1 vectors above and the testkit vectors pin both to other
+  // implementations.
+  test("x25519 DH symmetry on random scalar pairs; derivePublic clamps") {
     val rnd = new scala.util.Random(1234)
+    def scalar() = Array.fill[Byte](32)(rnd.nextInt(256).toByte)
     for (_ <- 1 to 100) {
-      val scalar = Array.fill[Byte](32)(rnd.nextInt(256).toByte)
-      assert(toHex(X25519.derivePublic(scalar)) ==
-        toHex(X25519.sharedSecret(scalar, base)))
+      val a = scalar()
+      val b = scalar()
+      assert(toHex(X25519.sharedSecret(a, X25519.derivePublic(b))) ==
+        toHex(X25519.sharedSecret(b, X25519.derivePublic(a))))
+      assert(toHex(X25519.derivePublic(a)) == toHex(X25519.derivePublic(X25519.clamp(a))))
+    }
+  }
+
+  // Secret material must not outlive its caller in a JVM-global cache: no
+  // field of these singletons may hold a map.
+  test("no map-valued global state in X25519, AgeKeys or AgeFormat") {
+    for (obj <- Seq[AnyRef](X25519, AgeKeys, AgeFormat)) {
+      val maps = obj.getClass.getDeclaredFields.toSeq.filter { f =>
+        f.setAccessible(true)
+        val v = if (java.lang.reflect.Modifier.isStatic(f.getModifiers)) f.get(null) else f.get(obj)
+        Seq(classOf[java.util.Map[_, _]], classOf[scala.collection.Map[_, _]]).exists(c =>
+          c.isAssignableFrom(f.getType) || c.isInstance(v))
+      }
+      assert(maps.isEmpty, s"${obj.getClass.getName} holds maps: ${maps.map(_.getName)}")
     }
   }
 

@@ -54,7 +54,9 @@ class DifferentialFuzzSpec extends AnyFunSuite {
     java.security.MessageDigest.getInstance("SHA-256").digest(b)
       .map("%02x".format(_)).mkString
 
-  private final case class Vec(body: Array[Byte], identity: Option[Array[Byte]],
+  // identity = (scalar, public key), derived once per vector as the SQL
+  // functions do once per key per task
+  private final case class Vec(body: Array[Byte], identity: Option[(Array[Byte], Array[Byte])],
                                passphrase: Option[String], wantSha: Option[String])
 
   private def loadVec(name: String): Vec = {
@@ -74,7 +76,7 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       s"$name: vector carries no key material")
     Vec(java.util.Arrays.copyOfRange(raw, sep + 2, raw.length),
       kv.get("identity").map(id => AgeKeys.parseIdentity(id)
-        .fold(e => fail(s"bad identity: $e"), identity)),
+        .fold(e => fail(s"bad identity: $e"), s => (s, X25519.derivePublic(s)))),
       kv.get("passphrase"), kv.get("payload"))
   }
 
@@ -82,7 +84,7 @@ class DifferentialFuzzSpec extends AnyFunSuite {
     try {
       // key-material presence is validated in loadVec; this match is total
       val pt = (v.identity, v.passphrase) match {
-        case (Some(id), _) => AgeFormat.decrypt(mutant, id)
+        case (Some((id, pub)), _) => AgeFormat.decrypt(mutant, id, pub)
         case (_, pw) => AgeFormat.decryptWithPassphrase(mutant, pw.get)
       }
       if (v.wantSha.exists(_ != sha256hex(pt))) "accept_other" else "accept"

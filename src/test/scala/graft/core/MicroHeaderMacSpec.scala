@@ -14,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the MAC input framing (header through the stanzas + "---") written
   *     from the spec text;
   *   - public-key derivation via KeyAgreement WITH THE BASE POINT
-  *     (priv·9 = public u-coordinate), an independent path from
-  *     production's BigInteger Montgomery ladder (X25519.derivePublic).
+  *     (priv·9 = public u-coordinate). Production's X25519.derivePublic
+  *     rides the same JDK provider, so derivation is NOT independent
+  *     here: it is pinned by the RFC 7748 §6.1 vectors (CryptoCoreSpec)
+  *     and the Python twin's (`cryptography`) testkit vectors.
   *
   * For every X25519 success vector in the testkit the micro-impl parses
   * the header bytes itself, unwraps the file key, recomputes the MAC and
@@ -78,7 +80,7 @@ class MicroHeaderMacSpec extends AnyFunSuite {
     ka.init(priv); ka.doPhase(pub, true)
     ka.generateSecret()
   }
-  /** priv·basepoint via KeyAgreement — independent of the production ladder. */
+  /** priv·basepoint via KeyAgreement (the JDK provider, as in production). */
   private def pubOf(scalar: Array[Byte]): Array[Byte] = {
     val base = new Array[Byte](32); base(0) = 9
     dh(scalar, base)

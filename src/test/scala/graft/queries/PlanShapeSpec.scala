@@ -264,6 +264,32 @@ class PlanShapeSpec extends AnyFunSuite {
       "q05's bloom filter build (bloom_filter_agg over date-filtered orders) is missing")
   }
 
+  test("bloom child recalibrates Spark's default gate and cap, honours pinned values") {
+    val gate = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+    val cap = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    // the default path: a root that sets neither key
+    val root = spark.newSession()
+    assert(!root.sessionState.conf.getAllConfs.contains(gate) &&
+      !root.sessionState.conf.getAllConfs.contains(cap))
+    val child = Relational.bloomChildSession(root)
+    assert(child.conf.get(gate) == "256MB")
+    assert(child.conf.get(cap) == "16777216")
+    // non-default pins ride through unchanged
+    val pinned = spark.newSession()
+    pinned.conf.set(gate, "9GB")
+    pinned.conf.set(cap, "33554432")
+    val pinnedChild = Relational.bloomChildSession(pinned)
+    assert(pinnedChild.conf.get(gate) == "9GB")
+    assert(pinnedChild.conf.get(cap) == "33554432")
+    // the default in another spelling is still the default
+    val explicit = spark.newSession()
+    explicit.conf.set(gate, "10g")
+    explicit.conf.set(cap, "67108864")
+    val explicitChild = Relational.bloomChildSession(explicit)
+    assert(explicitChild.conf.get(gate) == "256MB")
+    assert(explicitChild.conf.get(cap) == "16777216")
+  }
+
   test("q59 bucketed q03: the whole fact pipeline runs with ZERO shuffle exchanges") {
     val plan = physicalPlan("q59_bucketed_topn")
     assert(plan.contains("Bucketed: true"), "q59 lost the bucketed scans")

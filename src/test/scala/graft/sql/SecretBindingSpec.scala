@@ -192,6 +192,57 @@ class SecretBindingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a task's key memo follows the key: alternating literal, secret-name and wrong keys") {
+    val Seq(a, b, c, d) = Seq("a", "b", "c", "d").map(k => AgeKeys.fromSeed(s"memo-$k".getBytes("UTF-8")))
+    AgeSecretManager.create("memo_b",
+      AgeSecretOptions(publicKey = Some(b.publicKey), privateKey = Some(b.privateKey)))
+    try {
+      // one partition, so one task's functions see every key change; row
+      // id % 3 = 2 is encrypted for c and decrypted with the wrong key d
+      spark.sql(
+        s"""SELECT id, CAST(concat('row-', id) AS BINARY) AS pt,
+           |  CASE id % 3 WHEN 0 THEN '${a.publicKey}' WHEN 1 THEN 'memo_b' ELSE '${c.publicKey}' END AS rcpt,
+           |  CASE id % 3 WHEN 0 THEN '${a.privateKey}' WHEN 1 THEN 'memo_b' ELSE '${d.privateKey}' END AS ident,
+           |  IF(id % 2 = 0, array('${a.publicKey}'), array('memo_b', '${c.publicKey}')) AS rcpts,
+           |  IF(id % 2 = 0, '${a.privateKey}', '${c.privateKey}') AS multi_ident
+           |FROM range(0, 12, 1, 1)""".stripMargin).createOrReplaceTempView("memo_rows")
+      def strings(q: String) = spark.sql(q).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      def plain(id: Long) = s"row-$id"
+
+      val encrypted = spark.sql("SELECT id, age_encrypt(pt, rcpt) FROM memo_rows").collect()
+      assert(encrypted.length == 12)
+      encrypted.foreach { r =>
+        val id = r.getLong(0)
+        val key = Seq(a, b, c)((id % 3).toInt).privateKey
+        val scalar = AgeKeys.parseIdentity(key).toOption.get
+        assert(new String(graft.core.AgeFormat.decrypt(r.getAs[Array[Byte]](1), scalar)) == plain(id))
+      }
+      assert(strings("SELECT id, CAST(age_decrypt(age_encrypt(pt, rcpt), ident) AS STRING) " +
+        "FROM memo_rows WHERE id % 3 != 2") == (0L until 12L).filter(_ % 3 != 2).map(i => (i, plain(i))))
+      assert(strings("SELECT id, CAST(age_try_decrypt(age_encrypt(pt, rcpt), ident) AS STRING) " +
+        "FROM memo_rows") == (0L until 12L).map(i => (i, if (i % 3 == 2) null else plain(i))))
+      val e = intercept[Throwable](
+        spark.sql("SELECT age_decrypt(age_encrypt(pt, rcpt), ident) FROM memo_rows").collect())
+      assert(messages(e).exists(_.contains("Decryption failed: no matching key found")), messages(e))
+      assert(strings("SELECT id, CAST(age_decrypt(age_encrypt_multi(pt, rcpts), multi_ident) AS STRING) " +
+        "FROM memo_rows") == (0L until 12L).map(i => (i, plain(i))))
+      // a NULL-data row never resolves its key, however bad the key is
+      assert(strings(
+        """SELECT id, CAST(age_decrypt(IF(id % 2 = 0, NULL, age_encrypt(pt, rcpt)),
+          |                            IF(id % 2 = 0, 'AGE-SECRET-KEY-1BOGUS', ident)) AS STRING)
+          |FROM memo_rows WHERE id % 3 != 2""".stripMargin) ==
+        (0L until 12L).filter(_ % 3 != 2).map(i => (i, if (i % 2 == 0) null else plain(i))))
+      assert(spark.sql(
+        """SELECT count(*) FROM memo_rows
+          |WHERE age_encrypt(IF(id % 2 = 0, NULL, pt), IF(id % 2 = 0, 'no_such_key', rcpt)) IS NULL
+          |  AND age_encrypt_multi(IF(id % 2 = 0, NULL, pt), IF(id % 2 = 0, array('no_such_key'), rcpts)) IS NULL
+          |""".stripMargin).head().getLong(0) == 6L)
+    } finally {
+      AgeSecretManager.drop("memo_b")
+      spark.catalog.dropTempView("memo_rows")
+    }
+  }
+
   test("DESCRIBE FUNCTION reports the class each entry builds") {
     assert(spark.catalog.getFunction("cosine_sim").className ==
       classOf[graft.functions.CosineSim].getName)
