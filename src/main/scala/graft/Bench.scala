@@ -46,13 +46,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    // Size the shuffle to the data, not to a constant: ~32 MB of input per
-    // shuffle partition (clamped to [4, 8*cores]) is the same target AQE
-    // coalescing aims for at cluster scale. At sf0.1 (~17 MB total) that
-    // yields 4 partitions — a 32-partition shuffle there is pure task-
-    // dispatch overhead (measured: total drops 5.7s -> ~2.5s; VERDICT r1).
-    // At 100 TB the same rule yields the cap and AQE takes over (enabled
-    // above 1 GB, where its per-stage re-planning cost is amortized).
     // tables may be single files OR directories of part files (the
     // multi-file corpus twin, tools/split_corpus.py) — size recursively
     def sizeOf(f: java.io.File): Long =
@@ -64,37 +57,15 @@ object Bench {
       val fs = Option(root.listFiles).map(_.toSeq).getOrElse(Seq.empty)
       fs.filter(_.getName.endsWith(".parquet")).map(sizeOf).sum
     }
-    // capped at 2x cores: beyond that, extra partitions only add dispatch
-    // cost on one machine (measured: sp=200 at sf10 is ~40% slower than
-    // sp=64 on the count-distinct shape); on a real cluster AQE picks the
-    // reduce-side parallelism anyway
-    val shufflePartitions =
-      math.max(4L, math.min(totalBytes / (8L << 20), cpus.toInt * 2L))
-    // small inputs: split scans finer than the 128 MB default so all cores
-    // participate; big inputs: the default already saturates the cluster
-    val maxPartitionBytes = math.max(8L << 20, totalBytes / (cpus.toInt * 3L))
-    // compute-dense narrow tables (documents/embeddings) are only a few MB
-    // even when row counts are large — force scans to split so one core
-    // never owns a whole table (tx01 at sf1: 1 scan task = 5x slowdown)
-    val minPartitionNum =
-      math.max(1L, math.min(totalBytes / (4L << 20), cpus.toLong))
-    // AQE's per-stage re-planning costs ~70ms/query at toy scale (measured)
-    // but wins once shuffles are big enough to be worth coalescing/
-    // re-planning; 256 MB input was the measured crossover on the sf grid
-    val aqe = totalBytes > (256L << 20)
 
     // SPARK_GRAFT_MASTER: same cluster-mode lane as Verify (CLUSTER.md)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .withExtensions(new graft.sql.GraftSparkExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
       .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes.toString)
-      .config("spark.sql.files.minPartitionNum", minPartitionNum.toString)
       .config("spark.sql.files.openCostInBytes", (256L << 10).toString)
       .config("spark.locality.wait", "0")
       // Always use the sort-based shuffle writer, never bypass-merge. At
@@ -110,14 +81,23 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val qs = SparkEntry.queries
-    def exec(name: String, dir: String = sfDir): Boolean =
-      try { qs(name)(spark, dir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      }
-    // re-size the session for a given corpus (runtime-settable confs only) —
-    // same derivation as the builder confs above, applied per measured dir
+    // Size the session to a corpus (runtime-settable confs only), here for
+    // the primary dir and again per measured dir. Shuffle to the data, not
+    // to a constant: ~8 MB of input per shuffle partition, clamped to
+    // [4, 2*cores]. At sf0.1 (~17 MB total) that yields 4 partitions — a
+    // 32-partition shuffle there is pure task-dispatch overhead (measured:
+    // total drops 5.7s -> ~2.5s; VERDICT r1); beyond 2x cores extra
+    // partitions only add dispatch cost on one machine (sp=200 at sf10 is
+    // ~40% slower than sp=64 on the count-distinct shape), and on a real
+    // cluster AQE picks the reduce-side parallelism anyway. Small inputs
+    // split scans finer than the 128 MB default so all cores participate;
+    // compute-dense narrow tables (documents/embeddings) are only a few MB
+    // even when row counts are large, so scans are forced to split and one
+    // core never owns a whole table (tx01 at sf1: 1 scan task = 5x
+    // slowdown). AQE's per-stage re-planning costs ~70ms/query at toy
+    // scale (measured) but wins once shuffles are big enough to be worth
+    // coalescing/re-planning; 256 MB input was the measured crossover on
+    // the sf grid.
     def tuneFor(bytes: Long): Unit = {
       spark.conf.set("spark.sql.shuffle.partitions",
         math.max(4L, math.min(bytes / (8L << 20), cpus.toInt * 2L)).toString)
@@ -127,6 +107,14 @@ object Bench {
         math.max(1L, math.min(bytes / (4L << 20), cpus.toLong)).toString)
       spark.conf.set("spark.sql.adaptive.enabled", (bytes > (256L << 20)).toString)
     }
+    tuneFor(totalBytes)
+
+    val qs = SparkEntry.queries
+    def exec(name: String, dir: String = sfDir): Boolean =
+      try { qs(name)(spark, dir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+      }
     def timedPass(dir: String): Seq[(String, Double)] =
       headline.filter(qs.contains).map { name =>
         // best-of-3: single-shot local timings vary ~2x with background JVM

@@ -1,73 +1,47 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GraphX analytics over the star schema (north star — BASELINE.json names
-  * GraphX; nothing in the reference to port, SURVEY.md §7 phase 5).
+/** Graph analytics over the star schema, all of it DataFrame code.
   *
-  * Property graph: customer and order vertices, customer→order edges.
-  * Kept isolated in graft.graph so reference-parity checks never depend
-  * on it. Vertex ids are namespaced (orders offset by 1e12) because
-  * GraphX flattens to a single Long id space.
+  * The customer–order graph has customer and order vertices and one
+  * customer→order edge per order; order ids are offset by 1e12 so both
+  * kinds share one long id space. Its connected components run on
+  * [[StarCC]]. The co-purchase projection below is the edge list the
+  * co-purchase queries hand to StarCC, [[Triangles]] and [[FrontierBfs]].
   */
 object GraphOps {
   private val OrderOffset = 1000000000000L
 
-  def customerOrderGraph(spark: SparkSession, dir: String): Graph[String, Double] = {
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
-    val customers = spark.read.parquet(s"$dir/customer.parquet")
-    val vertices = customers
-      .select(col("c_custkey").cast("long"), lit("customer"))
-      .rdd.map(r => (r.getLong(0), r.getString(1)))
-      .union(orders.select((col("o_orderkey") + OrderOffset).cast("long"), lit("order"))
-        .rdd.map(r => (r.getLong(0), r.getString(1))))
-    val edges = orders
-      .select(col("o_custkey").cast("long"), (col("o_orderkey") + OrderOffset).cast("long"),
-        col("o_totalprice"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-    Graph(vertices, edges)
-  }
+  /** Orders per customer — the customer–order graph's out-degree, which is
+    * a group-by over orders (graph01's oracle is exactly that SQL). */
+  def customerDegrees(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/orders.parquet")
+      .groupBy(col("o_custkey").cast("long").as("c_custkey"))
+      .agg(count(lit(1)).as("n_orders"))
 
-  /** Out-degree per customer via GraphX — must agree with the SQL
-    * group-by (graph01_degree's oracle checks exactly that). */
-  def customerDegrees(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val g = customerOrderGraph(spark, dir)
-    g.outDegrees.filter(_._1 < OrderOffset)
-      .map { case (vid, deg) => (vid, deg) }
-      .toDF("c_custkey", "n_orders")
-  }
-
-  /** PageRank over the bipartite graph (demo analytics; no SQL oracle). */
-  def pageRankTop(spark: SparkSession, dir: String, n: Int = 10): DataFrame = {
-    import spark.implicits._
-    val g = customerOrderGraph(spark, dir)
-    val ranks = g.staticPageRank(5).vertices
-    ranks.filter(_._1 < OrderOffset)
-      .map { case (vid, r) => (vid, r) }
-      .toDF("c_custkey", "rank")
-      .orderBy(col("rank").desc, col("c_custkey"))
-      .limit(n)
-  }
-
-  /** Connected components over the customer–order graph. */
+  /** Connected components of the customer–order graph. A customer with no
+    * order has no edge, so StarCC never sees it: it counts as a component
+    * of its own. */
   def componentCount(spark: SparkSession, dir: String): Long = {
-    val g = customerOrderGraph(spark, dir)
-    g.connectedComponents().vertices.map(_._2).distinct().count()
+    val orders = spark.read.parquet(s"$dir/orders.parquet")
+    val lab = StarCC.labels(orders.select(col("o_custkey").as("src"),
+      (col("o_orderkey") + OrderOffset).as("dst")))
+    spark.read.parquet(s"$dir/customer.parquet")
+      .select(col("c_custkey").cast("long").as("node"))
+      .join(lab, Seq("node"), "left_anti")
+      .select(col("node").as("root"))
+      .union(lab.select("root"))
+      .distinct().count()
   }
 
-  /** Customer–customer co-purchase projection: an edge per customer pair
-    * sharing a purchased part, weighted by how many parts they share.
-    * Unlike the bipartite graph (where every customer has identical rank —
-    * no in-edges), PageRank differentiates here. Parts with huge buyer
-    * sets are dropped before pairing: the pair fan-out of a hot part is
-    * quadratic, exactly the key-skew shape that melts at scale.
-    */
-  /** The co-purchase edge list (src < dst, weight = #shared parts) — the
-    * relational projection the graph is built from, exposed separately so
-    * it can be oracle-checked against the equivalent SQL (graph02).
+  /** The customer–customer co-purchase edge list: one edge per customer
+    * pair sharing a purchased part (src < dst, weight = #shared parts),
+    * oracle-checked against the equivalent SQL (graph02). Parts with more
+    * than `maxBuyersPerPart` buyers are dropped before pairing: the pair
+    * fan-out of a hot part is quadratic, exactly the key-skew shape that
+    * melts at scale.
     *
     * `custMod > 1` restricts to the deterministic vertex subsample
     * `o_custkey % custMod == 0` BEFORE pairing — the induced subgraph both
@@ -94,65 +68,5 @@ object GraphOps {
         col("a.part") === col("b.part") && col("a.cust") < col("b.cust"))
       .groupBy(col("a.cust").as("src"), col("b.cust").as("dst"))
       .agg(count(lit(1)).cast("int").as("w"))
-  }
-
-  def coPurchaseGraph(spark: SparkSession, dir: String,
-                      maxBuyersPerPart: Int = 40, custMod: Int = 1): Graph[Int, Int] = {
-    val pairs = coPurchasePairs(spark, dir, maxBuyersPerPart, custMod)
-    val edges = pairs.rdd.flatMap { r =>
-      val (s, d, w) = (r.getLong(0), r.getLong(1), r.getInt(2))
-      Seq(Edge(s, d, w), Edge(d, s, w)) // undirected → both directions
-    }
-    Graph.fromEdges(edges, defaultValue = 0)
-  }
-
-  /** BFS hop-depth layers from the smallest co-purchase vertex via
-    * GraphX Pregel — the message-passing tier below the packaged
-    * algorithms (CC/PageRank/TriangleCount are all Pregel instances).
-    * One superstep propagates the frontier one hop, so after `maxDepth`
-    * supersteps every vertex holds min(true BFS depth, unreachable) for
-    * depths <= maxDepth — the standard bounded-radius reachability query
-    * (friend-of-friend, blast-radius). At 100 TB the per-superstep work
-    * is one message per frontier-adjacent edge; nothing global. */
-  def bfsDepths(spark: SparkSession, dir: String, maxDepth: Int): DataFrame = {
-    import spark.implicits._
-    val g = coPurchaseGraph(spark, dir)
-    // deterministic source: the smallest vertex id in the edge relation
-    val src: VertexId = g.edges.map(e => math.min(e.srcId, e.dstId)).min()
-    val init = g.mapVertices((id, _) => if (id == src) 0 else Int.MaxValue)
-    val res = init.pregel(Int.MaxValue, maxIterations = maxDepth)(
-      (_, d, m) => math.min(d, m),
-      t => if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-        Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices.filter(_._2 != Int.MaxValue)
-      .map { case (_, d) => d }
-      .toDF("depth")
-      .groupBy("depth").agg(count(lit(1)).as("n_custs"))
-      .orderBy("depth")
-  }
-
-  /** Total triangles in the co-purchase projection via GraphX
-    * TriangleCount (which canonicalizes edges itself: self-edges dropped,
-    * src<dst dedup). Per-vertex counts sum to 3× the triangle total. The
-    * quadratic hot-part fan-out is already capped upstream in
-    * coPurchasePairs, so the neighborhood-intersection stage is bounded. */
-  def coPurchaseTriangles(spark: SparkSession, dir: String,
-                          custMod: Int = 1): Long = {
-    val pairs = coPurchasePairs(spark, dir, custMod = custMod)
-    val edges = pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    Graph.fromEdges(edges, 0)
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
-      .triangleCount().vertices.map(_._2.toLong).sum().toLong / 3
-  }
-
-  /** PageRank over the co-purchase projection — top-n central customers. */
-  def coPurchaseRankTop(spark: SparkSession, dir: String, n: Int = 10): DataFrame = {
-    import spark.implicits._
-    coPurchaseGraph(spark, dir).staticPageRank(10).vertices
-      .map { case (vid, r) => (vid, r) }
-      .toDF("c_custkey", "rank")
-      .orderBy(col("rank").desc, col("c_custkey"))
-      .limit(n)
   }
 }

@@ -1,7 +1,13 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{DataFrame, GraftShims, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Connected components WITHOUT GraphX: alternating large-star/small-star
   * rounds over pure DataFrames — the published MapReduce-scale CC algorithm
@@ -13,10 +19,19 @@ import org.apache.spark.sql.functions._
   *
   * Invariant maintained by both steps: every emitted edge points strictly
   * downward (src > dst), so the fixpoint is exactly a disjoint union of
-  * stars rooted at component minima — the same min-label semantics GraphX
-  * `connectedComponents()` produces (three-way agreement with GraphX and a
-  * DuckDB recursive min-label CTE is gate-checked by graph09; label-level
-  * equality at scale by Graph09Probe).
+  * stars rooted at component minima (min-label semantics, gate-checked
+  * against a DuckDB recursive min-label CTE by graph09 and dd09; GraphX
+  * `connectedComponents()` stays in test scope as an independent
+  * reference: GraphCcSpec, and label-level equality at scale in
+  * Graph09Probe).
+  *
+  * Graphs that fit the session's broadcast budget (16 B per edge against
+  * `spark.sql.autoBroadcastJoinThreshold`; a threshold ≤ 0 disables it)
+  * skip the rounds: the edge-checkpoint job observes the edge count, and
+  * under the cut the checkpointed edges are collected and finished with an
+  * array union-find on the driver ([[driverLabels]]). Below the cut job
+  * dispatch is the whole cost of a round, so this path runs two jobs in
+  * total; above it the rounds below run unchanged.
   *
   * A round is two jobs: largeStar's output is checkpointed, then
   * smallStar's (tx31's lineage-truncation discipline: iterative lazy plans
@@ -138,7 +153,9 @@ object StarCC {
     * orientation irrelevant, self-loops ignored): returns `(node, root)`
     * with one row per vertex incident to an edge, `root` = the minimum
     * vertex id reachable from `node`. Isolated vertices (absent from the
-    * edge list) are the caller's concern, matching GraphX `fromEdges`.
+    * edge list) are the caller's concern. A graph under the broadcast
+    * budget finishes on the driver (see the banner); `maxIter`,
+    * `reliable` and `skewSafe` govern the rounds of the graphs above it.
     *
     * `skewSafe`: re-exchange each round's vertex-sized mins relation so
     * AQE's skew-join rewrite can split a power-law hub partition on the
@@ -161,9 +178,16 @@ object StarCC {
     // materialized ONCE: both the fixpoint's round 0 and the final vertex
     // set read this frame, so the (possibly expensive) upstream edge
     // pipeline — graph09's minhash-LSH self-join, the probe's co-purchase
-    // projection — never re-executes after the loop
-    val pairs = ckpt(edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")))
+    // projection — never re-executes after the loop. The edge count is
+    // observed in the same job, so choosing the driver finish is free.
+    val size = Observation()
+    val pairs = ckpt(edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"))
+      .where(col("src") =!= col("dst"))
+      .observe(size, count(lit(1)).as("n")))
+    val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (budget > 0 && size.get("n").asInstanceOf[Long] <= budget / 16)
+      return driverLabels(pairs)
 
     var e = pairs
     var prev = Map.empty[String, Any]
@@ -199,5 +223,50 @@ object StarCC {
     val roots = nodes.join(e.select(col("src")), nodes("node") === col("src"), "left_anti")
       .select(col("node"), col("node").as("root"))
     e.select(col("src").as("node"), col("dst").as("root")).union(roots)
+  }
+
+  /** [[labels]]' finish for a graph under the broadcast budget: the edge
+    * endpoints are collected as primitive longs (one array per partition,
+    * never boxed rows), ranked by sorting, and merged by a union-find over
+    * the ranks that always hangs the larger root under the smaller. Rank
+    * order is id order, so every root is its component's minimum id, the
+    * labeling the rounds reach. Returns the same `(node, root)` rows as a
+    * local frame whose rows are written straight into UnsafeRows (no
+    * per-row tuple or encoder pass). Driver footprint: the collected
+    * endpoints and their sorted copy (32 B per edge), an int parent per
+    * vertex, and one 2-long UnsafeRow per vertex (~80 B), which the local
+    * scan copies once more when the frame executes. */
+  private def driverLabels(pairs: DataFrame): DataFrame = {
+    val parts = pairs.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator(b.result())
+    }.collect() // src, dst interleaved
+    val ids = Array.concat(ArraySeq.unsafeWrapArray(parts): _*)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(n - 1) != ids(i)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def rank(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, v)
+    for (ends <- parts; i <- ends.indices by 2) {
+      val (a, b) = (find(rank(ends(i))), find(rank(ends(i + 1))))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val width = UnsafeRow.calculateBitSetWidthInBytes(2) + 16
+    val rows = Array.tabulate[InternalRow](n) { v =>
+      val r = new UnsafeRow(2)
+      r.pointTo(new Array[Byte](width), width)
+      r.setLong(0, ids(v)); r.setLong(1, ids(find(v)))
+      r
+    }
+    GraftShims.dataFrameOf(pairs.sparkSession, LocalRelation(
+      Seq(AttributeReference("node", LongType, nullable = false)(),
+        AttributeReference("root", LongType, nullable = false)()),
+      ArraySeq.unsafeWrapArray(rows)))
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * ("node-iterator++" / compact-forward: Schank & Wagner, "Finding,
   * Counting and Listing all Triangles in Large Graphs", WEA'05; the same
   * orientation trick every MapReduce triangle paper builds on, e.g. Suri &
-  * Vassilvitskii, WWW'11). This is the 100 TB posture the GraphX
-  * `triangleCount()` path (graph05) cannot offer: GraphX caches the
+  * Vassilvitskii, WWW'11); graph05 and graph13 count with it. This is the
+  * 100 TB posture GraphX `triangleCount()` cannot offer: GraphX caches the
   * vertex+edge RDDs and materializes per-vertex neighbor sets on the heap
   * (named-excluded OOM at sf10 even in a 100 GB JVM — bench/
   * sweep_sf10_r18.json), while this formulation is three hash-partitioned
@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * expensive) upstream pipeline like the co-purchase projection never
   * re-executes (StarCC/FrontierBfs discipline).
   *
-  * Semantics match GraphX `triangleCount()` summed/3 (graph05): input
+  * Semantics match GraphX `triangleCount()` summed/3 (TrianglesSpec): input
   * orientation and duplicates are irrelevant (canonicalized + distinct
   * here), self-loops dropped.
   */

@@ -1,11 +1,12 @@
 package graft.queries
 
-import graft.graph.GraphOps
+import graft.graph.{FrontierBfs, GraphOps, StarCC, Triangles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GraphX-backed queries with relational oracles: the graph result must
-  * agree with the equivalent SQL aggregation, which DuckDB can check. */
+/** Graph queries with relational oracles: the graph result must agree
+  * with the equivalent SQL aggregation, which DuckDB can check. Connected
+  * components run on StarCC, triangles on Triangles, BFS on FrontierBfs. */
 object GraphQueries {
   val defs: Seq[QueryDef] = Seq(
     QueryDef("graph01_degree", (s, d) => {
@@ -17,7 +18,7 @@ object GraphQueries {
       FROM orders GROUP BY 1 ORDER BY c_custkey""")),
 
     // the co-purchase projection (hot parts capped at 40 buyers) the
-    // GraphX PageRank runs on — the scale-critical relational step. Gated
+    // co-purchase queries run on — the scale-critical relational step. Gated
     // at EVERY sf by a bounded per-bucket certificate (r19, VERDICT r18
     // #2): the relation itself is ~1e9 rows at sf10, where the harness's
     // cell-for-cell pandas compare — not either engine — was the sweep
@@ -73,7 +74,8 @@ object GraphQueries {
 
     // bipartite customer->order graph invariant: every order attaches to
     // exactly one customer, so each connected component is one customer
-    // plus their orders — GraphX's component count must equal |customer|
+    // plus their orders — StarCC's component count (customers without an
+    // order counted as their own component) must equal |customer|
     QueryDef("graph03_components", (s, d) => {
       import s.implicits._
       Seq(GraphOps.componentCount(s, d)).toDF("n_components")
@@ -83,7 +85,7 @@ object GraphQueries {
     // by a FIXPOINT CERTIFICATE instead of SQL recursion (r12 ask #1): the
     // recursive min-label oracle carries every label to every reachable
     // node — O(k²) rows per size-k component, >60 GB spill at sf1 — so at
-    // scale we verify the labeling rather than recompute it. GraphX CC
+    // scale we verify the labeling rather than recompute it. StarCC
     // labels each vertex with the min reachable vertex id; the certificate
     // counts violations of the properties that labeling must satisfy:
     //   n_cross_edges  — edges whose endpoints got different labels
@@ -101,20 +103,12 @@ object GraphQueries {
     // sf0.001 and requires label-for-label equality.
     QueryDef("graph04_copurchase_cc", (s, d) => {
       import s.implicits._
-      // derive the expensive projection ONCE and checkpoint it: both the
-      // GraphX build and the certificate's edge check read the cached
-      // relation (graph06's reuse pattern; code-review r13)
+      // derive the expensive projection ONCE and checkpoint it: both
+      // StarCC and the certificate's edge check read the stored relation
+      // (graph06's reuse pattern; code-review r13)
       val pairs = GraphOps.coPurchasePairs(s, d).select("src", "dst")
         .localCheckpoint()
-      val lab = {
-        val edges = pairs.rdd.flatMap { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          Seq(org.apache.spark.graphx.Edge(a, b, 1),
-            org.apache.spark.graphx.Edge(b, a, 1))
-        }
-        org.apache.spark.graphx.Graph.fromEdges(edges, 0)
-          .connectedComponents().vertices.toDF("node", "lbl")
-      }
+      val lab = StarCC.labels(pairs).select(col("node"), col("root").as("lbl"))
       val anchor = lab.as("v")
         .join(lab.as("r"), col("v.lbl") === col("r.node"), "left")
         .agg(
@@ -157,11 +151,12 @@ object GraphQueries {
     // DENSE (avg degree ~1100 at sf1), so the oracle's wedge join is
     // Σdeg² ≈ 2e11 rows — infeasible in any engine; the 10% vertex sample
     // keeps ~1% of the pairs (1.3M triangles, oracle 2.4 s at sf1) and
-    // scales WITH sf rather than being a constant-work cap, while GraphX
-    // runs the identical neighborhood-intersection kernel.
+    // scales WITH sf rather than being a constant-work cap. Counted by
+    // graft.graph.Triangles' degree-ordered wedge join, as graph13 is.
     QueryDef("graph05_triangles", (s, d) => {
       import s.implicits._
-      Seq(GraphOps.coPurchaseTriangles(s, d, custMod = 10)).toDF("n_triangles")
+      val pairs = GraphOps.coPurchasePairs(s, d, custMod = 10).select("src", "dst")
+      Seq(Triangles.count(pairs)).toDF("n_triangles")
     }, Some("""
       WITH cp AS (
         SELECT DISTINCT o_custkey AS cust, l_partkey AS part
@@ -230,16 +225,21 @@ object GraphQueries {
               GROUP BY e.dst)
       SELECT node, CAST(pr AS BIGINT) AS pr FROM it3 ORDER BY node""")),
 
-    // ---- graph07: bounded-radius BFS layers via raw Pregel — the
-    // message-passing tier the packaged algorithms are built on, driven
-    // directly: hop-depth layers (<= 4) from the smallest co-purchase
-    // vertex, counted per depth. The oracle recomputes min-depth
-    // reachability from first principles with a recursive CTE whose
-    // UNION dedup bounds the walk at |V| x depth rows. One Pregel
-    // superstep per hop; frontier-local messages only — the shape that
-    // holds on a billion-vertex graph.
+    // ---- graph07: bounded-radius BFS layers: hop-depth layers (<= 4)
+    // from the smallest co-purchase vertex, counted per depth. The oracle
+    // recomputes min-depth reachability from first principles with a
+    // recursive CTE whose UNION dedup bounds the walk at |V| x depth rows.
+    // graft.graph.FrontierBfs walks the whole component (one frontier ⨝
+    // edges round per hop, frontier-local messages only — the shape that
+    // holds on a billion-vertex graph) and the layers past 4 are filtered.
     QueryDef("graph07_bfs_layers", (s, d) => {
-      GraphOps.bfsDepths(s, d, maxDepth = 4)
+      // stored once: the source's min and the walk both read it
+      val pairs = GraphOps.coPurchasePairs(s, d).select("src", "dst").localCheckpoint()
+      val source = pairs.agg(min(col("src"))).head().getLong(0) // src < dst
+      FrontierBfs.depths(pairs, source)
+        .filter(col("depth") <= 4)
+        .groupBy("depth").agg(count(lit(1)).as("n_custs"))
+        .orderBy("depth")
     }, Some("""
       WITH RECURSIVE edges AS (
         SELECT src, dst FROM (
@@ -316,37 +316,22 @@ object GraphQueries {
       SELECT ca, cb, c, jac_x1e4 FROM scored
       WHERE jac_x1e4 >= 1000 ORDER BY ca, cb""")),
 
-    // ---- graph09: connected components WITHOUT GraphX — alternating
-    // large-star/small-star rounds over pure DataFrames (the published
-    // MapReduce-scale CC algorithm: Kiveris et al., "Connected Components
-    // in MapReduce and Beyond", SoCC'14). This is the 100 TB posture the
-    // GraphX path (dd09/graph04) can't offer: no RDD vertex/edge caching,
-    // no Pregel vertex program — every round is a hash-partitioned
-    // groupBy + equi-join that AQE can re-plan, skew-split, and spill,
-    // and the edge relation SHRINKS monotonically toward a star forest in
-    // O(log n) rounds. Invariant maintained by both steps: every emitted
-    // edge points strictly downward (src > dst), so the fixpoint is
-    // exactly a disjoint union of stars rooted at component minima —
-    // the same min-label semantics GraphX CC produces. A round is two
-    // localCheckpoint jobs, one per star step (tx31's lineage-truncation
-    // discipline; smallStar then scans stored largeStar output instead of
-    // re-running it for each of its three reads); convergence is a
-    // 2-value (count, xor-of-hashes) fixpoint certificate observed as
-    // metrics of the smallStar job, never corpus-sized. Runs on the SAME
-    // bounded minhash-LSH near-dup edge set as dd09 and emits the SAME
-    // (root, n_docs, max_doc) relation, so GraphX CC (dd09), star CC
-    // (this), and DuckDB's recursive min-label CTE are mutually
-    // oracle-checked three ways. Algorithm lives in graft.graph.StarCC
-    // (shared with Graph09Probe's full-graph sf1 lane and GraphCcSpec).
-    QueryDef("graph09_star_cc", (s, d) => {
-      val pairs = TextDedup.minhashBandPairs(TextDedup.docsBounded(s, d, 200), broadcastBands = true)
-        .select(col("ida").as("src"), col("idb").as("dst"))
-      graft.graph.StarCC.labels(pairs)
-        .select(col("node").as("doc_id"), col("root"))
-        .groupBy("root")
-        .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_doc"))
-        .orderBy("root")
-    }, Some(s"""
+    // ---- graph09: connected components on graft.graph.StarCC —
+    // alternating large-star/small-star rounds over pure DataFrames (the
+    // published MapReduce-scale CC algorithm: Kiveris et al., "Connected
+    // Components in MapReduce and Beyond", SoCC'14): no RDD vertex/edge
+    // caching, no Pregel vertex program — every round is a
+    // hash-partitioned groupBy + equi-join that AQE can re-plan,
+    // skew-split, and spill, and the edge relation SHRINKS monotonically
+    // toward a star forest in O(log n) rounds whose roots are component
+    // minima. A candidate set under the broadcast budget (this one, at
+    // every gate sf) skips the rounds and finishes with a union-find on
+    // the driver. Runs on the SAME bounded minhash-LSH near-dup edge set
+    // as dd09 and emits the SAME (root, n_docs, max_doc) relation, checked
+    // against DuckDB's recursive min-label CTE; GraphCcSpec checks StarCC
+    // on this edge set, on both paths, against GraphX in test scope, and
+    // Graph09Probe does so at sf1 on the full co-purchase graph.
+    QueryDef("graph09_star_cc", (s, d) => TextDedup.nearDupClusterSizes(s, d), Some(s"""
       WITH RECURSIVE docs200 AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
       ${TextDedup.minhashPairsSql("docs200")},
       ${TextDedup.ccFixpointSql}
@@ -365,7 +350,11 @@ object GraphQueries {
     // graph09's), and what the gate checks is that the skewSafe rounds
     // (mins re-exchanged through the lazy greatest(u,u) partitioning
     // break inside each star step's checkpoint job, two per round) are
-    // label-identical to the closed form at every sf. src is written
+    // label-identical to the closed form at every sf. The hub graph
+    // (<= 20k vertices) always fits the broadcast budget, where StarCC
+    // would finish on the driver, so hubGraph builds it in a child
+    // session with broadcast joins off (roundsSession) and the rounds
+    // run at every sf. src is written
     // pmod(v,1) (= 0 for the non-negative keys) rather than lit(0): a
     // literal alias under Union trips Spark 4.1's constraint rewriting
     // (key not found: src#N — StarCcSkewProbe hit it; probe disables
@@ -377,7 +366,7 @@ object GraphQueries {
     // 1-based dbgen data and sparse key sets too.
     QueryDef("graph10_skewsafe_cc", (s, d) => {
       val (verts, edges) = hubGraph(s, d)
-      hubGraphRoots(verts, graft.graph.StarCC.labels(edges, skewSafe = true))
+      hubGraphRoots(verts, StarCC.labels(edges, skewSafe = true))
     }, Some(hubGraphOracleSql)),
 
     // ---- graph11: skewSafe AUTO (VERDICT r17 #5) — the barrier decision
@@ -392,12 +381,12 @@ object GraphQueries {
     // every sf alongside the explicit-flag path.
     QueryDef("graph11_auto_skew_cc", (s, d) => {
       val (verts, edges) = hubGraph(s, d)
-      hubGraphRoots(verts, graft.graph.StarCC.labelsAuto(edges))
+      hubGraphRoots(verts, StarCC.labelsAuto(edges))
     }, Some(hubGraphOracleSql)),
 
     // ---- graph12: DataFrame-native BFS (r18) — the scale tier the first
-    // full sf10 sweep proved graph07's Pregel BFS cannot offer (GraphX
-    // caches the vertex+edge RDDs; OOM at sf10 even in a 100 GB JVM).
+    // full sf10 sweep proved GraphX's Pregel BFS cannot offer (it caches
+    // the vertex+edge RDDs; OOM at sf10 even in a 100 GB JVM).
     // FrontierBfs walks frontier ⨝ edges + anti-join rounds with nothing
     // resident. Gate graph: the HALVING TREE over v = custkey % 20000 —
     // every vertex's full ancestor chain u → u>>1 → … → 1 → 0 is
@@ -417,7 +406,7 @@ object GraphQueries {
         .filter(col("src") >= 1)
         .select(col("src"), expr("shiftright(src, 1)").as("dst"))
         .distinct()
-      graft.graph.FrontierBfs.depths(edges, source = 0L)
+      FrontierBfs.depths(edges, source = 0L)
         .groupBy("depth")
         .agg(count(lit(1)).as("n_nodes"), sum(col("v")).as("sum_v"))
         .orderBy("depth")
@@ -440,20 +429,20 @@ object GraphQueries {
       FROM d GROUP BY 1 ORDER BY 1""")),
 
     // ---- graph13: DataFrame-native triangle counting (r19, VERDICT r18
-    // #1) — the scale tier for the family's largest remaining GraphX
-    // exclusion: graph05's `triangleCount()` needs per-vertex neighbor
-    // sets cached on the heap (OOM at sf10; sweep_sf10_r18). Triangles
-    // re-expressed as the degree-ordered wedge join (graft.graph.
-    // Triangles: orient low-rank → high-rank, wedge equi-join on the
-    // apex, close with an edge equi-join — O(E^1.5) total work, every
-    // step an AQE-replannable shuffle join). Same graph as graph05 (the
-    // cust%10 induced co-purchase subgraph), same oracle, so GraphX,
-    // the wedge join, and DuckDB's triple-join are mutually checked.
+    // #1) — the scale tier for the family's largest GraphX exclusion:
+    // GraphX `triangleCount()` needs per-vertex neighbor sets cached on
+    // the heap (OOM at sf10; sweep_sf10_r18). Triangles re-expressed as
+    // the degree-ordered wedge join (graft.graph.Triangles: orient
+    // low-rank → high-rank, wedge equi-join on the apex, close with an
+    // edge equi-join — O(E^1.5) total work, every step an AQE-replannable
+    // shuffle join). Same graph, kernel and oracle as graph05 (the cust%10
+    // induced co-purchase subgraph); TrianglesSpec checks the kernel
+    // against GraphX `triangleCount()` in test scope.
     QueryDef("graph13_triangles_df", (s, d) => {
       import s.implicits._
       val pairs = GraphOps.coPurchasePairs(s, d, custMod = 10)
         .select("src", "dst")
-      Seq(graft.graph.Triangles.count(pairs)).toDF("n_triangles")
+      Seq(Triangles.count(pairs)).toDF("n_triangles")
     }, Some("""
       WITH cp AS (
         SELECT DISTINCT o_custkey AS cust, l_partkey AS part
@@ -651,6 +640,24 @@ object GraphQueries {
     ranks
   }
 
+  /** Child sessions for graph10/graph11, one per root session so that
+    * Tables.load's per-session cache stays warm; weak-keyed, as
+    * Relational's bloom children are. */
+  private val roundsSessions =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  /** A child of `s0` carrying its runtime confs with broadcast joins off:
+    * StarCC.labels then never takes its driver finish, so a graph built
+    * here runs the distributed rounds (with AQE's skew-join split, which
+    * only rewrites sort-merge joins) whatever its size. */
+  private def roundsSession(s0: SparkSession): SparkSession = {
+    val s = roundsSessions.computeIfAbsent(s0, (root: SparkSession) => root.newSession())
+    s0.conf.getAll.foreach { case (k, v) => if (s0.conf.isModifiable(k)) s.conf.set(k, v) }
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
   /** The deterministic power-law gate graph shared by graph10/graph11:
     * vertices v = c_custkey % 20000 ∪ {0} (the hub root is a member by
     * construction — both the 0-row and the hub-edge src are written as
@@ -658,8 +665,8 @@ object GraphQueries {
     * chain edges (v, v%50) hang every vertex under its residue-class rep;
     * hub edges (0, v) for v%50 ∈ {13,27,41} pour ~6% of all edges onto
     * vertex 0. */
-  private def hubGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val vraw = Tables.load(s, d, "customer")
+  private def hubGraph(s0: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val vraw = Tables.load(roundsSession(s0), d, "customer")
       .select((col("c_custkey") % 20000).as("v"))
     val verts = vraw
       .union(vraw.limit(1).select(pmod(col("v"), lit(1L)).as("v")))

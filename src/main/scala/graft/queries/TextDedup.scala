@@ -30,6 +30,22 @@ object TextDedup {
   private[queries] def docsBounded(s: SparkSession, d: String, maxDoc: Long): DataFrame =
     docs(s, d).filter(col("doc_id") < maxDoc)
 
+  /** Near-dup clusters of the first 200 docs as `(doc_id, root)`: dd03's
+    * banded MinHash candidate pairs → StarCC connected components, root =
+    * the cluster's min doc_id. Docs in no candidate pair are absent. The
+    * cluster step of dd09, dd11, dd18, dd19, dd26 and graph09. */
+  private[queries] def nearDupClusters(s: SparkSession, d: String): DataFrame =
+    graft.graph.StarCC.labels(minhashBandPairs(docsBounded(s, d, 200), broadcastBands = true)
+        .select(col("ida").as("src"), col("idb").as("dst")))
+      .select(col("node").as("doc_id"), col("root"))
+
+  /** `(root, n_docs, max_doc)` per near-dup cluster (dd09, graph09). */
+  private[queries] def nearDupClusterSizes(s: SparkSession, d: String): DataFrame =
+    nearDupClusters(s, d)
+      .groupBy("root")
+      .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_doc"))
+      .orderBy("root")
+
   private[queries] def shinglesOf(df: DataFrame): DataFrame =
     shinglesRawOf(df).distinct()
 
@@ -70,7 +86,7 @@ object TextDedup {
   /** Max docs a shingle may appear in before it is excluded from Jaccard
     * similarity. A stop-phrase shingle shared by k docs fans out k² join
     * rows — one degenerate repeated phrase melts the stage at 100 TB. Same
-    * skew guard as GraphOps.maxBuyersPerPart (graph/GraphOps.scala:75-77).
+    * skew guard as `maxBuyersPerPart` in GraphOps.coPurchasePairs.
     * Excluded from BOTH the intersection join and the per-doc set sizes, so
     * the semantics stay a true Jaccard over the filtered shingle space. */
   val maxShingleDocFreq = 20
@@ -272,9 +288,9 @@ object TextDedup {
 
   /** Recursive min-label connected-components oracle block over a
     * `pairs(ida, idb)` CTE (dd09/dd19/graph09 share it — one definition,
-    * so the three-way GraphX/StarCC/DuckDB agreement can't silently
-    * diverge on the oracle side): emits edges/verts/reach/comp; callers
-    * SELECT from `comp(node, root)`. */
+    * so the StarCC/DuckDB agreement can't silently diverge on the oracle
+    * side): emits edges/verts/reach/comp; callers SELECT from
+    * `comp(node, root)`. */
   private[queries] val ccFixpointSql: String = """
       edges AS (SELECT ida AS src, idb AS dst FROM pairs
                 UNION SELECT idb, ida FROM pairs),
@@ -455,23 +471,13 @@ object TextDedup {
     // ---- dd09: near-dup CLUSTERS — the step after pair generation every
     // real dedup pipeline runs: candidate pairs (dd03's banded MinHash
     // join) → connected components → one keeper per cluster. Components
-    // via GraphX (iterative label propagation, checkpointed shuffles —
-    // the 100 TB path; a driver-side union-find would not distribute);
-    // the oracle re-derives the same clusters as a recursive-CTE
-    // min-label reachability, so the iterative graph algorithm is checked
-    // against a first-principles SQL fixpoint (graph04 pattern).
-    QueryDef("dd09_lsh_cc_clusters", (s, d) => {
-      import s.implicits._
-      val pairs = minhashBandPairs(docsBounded(s, d, 200), broadcastBands = true)
-      val edges = pairs.select(col("ida"), col("idb")).as[(Long, Long)].rdd
-        .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, 1) }
-      val cc = org.apache.spark.graphx.Graph.fromEdges(edges, 0)
-        .connectedComponents().vertices // label = min doc_id in component
-      cc.toDF("doc_id", "root")
-        .groupBy("root")
-        .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_doc"))
-        .orderBy("root")
-    }, Some(s"""
+    // via StarCC: a candidate set under the broadcast budget finishes with
+    // a union-find on the driver, a larger one runs the distributed
+    // large-star/small-star rounds (the 100 TB path). The oracle re-derives
+    // the same clusters as a recursive-CTE min-label reachability, so the
+    // graph algorithm is checked against a first-principles SQL fixpoint
+    // (graph04 pattern).
+    QueryDef("dd09_lsh_cc_clusters", (s, d) => nearDupClusterSizes(s, d), Some(s"""
       WITH RECURSIVE docs200 AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
       ${minhashPairsSql("docs200")},
       $ccFixpointSql
@@ -484,16 +490,10 @@ object TextDedup {
     // document (longest / highest quality) and drop its near-duplicates.
     // Per cluster: the (n_chars DESC, doc_id ASC) argmax via a single
     // struct-max aggregate — no window over the corpus, and the cluster
-    // relation is the GraphX CC output (cluster-sized, tiny next to the
+    // relation is dd09's StarCC output (cluster-sized, tiny next to the
     // corpus at any scale); quality joins in by doc_id equi-join.
     QueryDef("dd19_canonical_selection", (s, d) => {
-      import s.implicits._
-      val pairs = minhashBandPairs(docsBounded(s, d, 200), broadcastBands = true)
-      val edges = pairs.select(col("ida"), col("idb")).as[(Long, Long)].rdd
-        .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, 1) }
-      val cc = org.apache.spark.graphx.Graph.fromEdges(edges, 0)
-        .connectedComponents().vertices
-      val comp = cc.toDF("doc_id", "root")
+      val comp = nearDupClusters(s, d)
       val dq = docs(s, d).select(col("doc_id"), col("n_chars"))
       comp.join(dq, "doc_id")
         .groupBy("root")
@@ -894,16 +894,11 @@ object TextDedup {
     // production pipeline ships: MinHash-LSH pairs → connected components
     // → drop every non-root member → surviving-corpus stats. The drop is
     // a broadcast-able anti-join against the (tiny) non-keeper list; at
-    // 100 TB the component labels come from the same GraphX job dd09
-    // runs, and the anti-join is the only extra exchange.
+    // 100 TB the component labels come from the same StarCC run dd09
+    // makes, and the anti-join is the only extra exchange.
     QueryDef("dd11_neardup_dedup_apply", (s, d) => {
-      import s.implicits._
       val doc = docs(s, d).filter(col("doc_id") < 200)
-      val pairs = minhashBandPairs(docsBounded(s, d, 200), broadcastBands = true)
-      val edges = pairs.select(col("ida"), col("idb")).as[(Long, Long)].rdd
-        .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, 1) }
-      val drop = org.apache.spark.graphx.Graph.fromEdges(edges, 0)
-        .connectedComponents().vertices.toDF("doc_id", "root")
+      val drop = nearDupClusters(s, d)
         .filter(col("doc_id") =!= col("root")) // keep each cluster's min id
         .select("doc_id")
       doc.join(drop, Seq("doc_id"), "left_anti")
@@ -1344,13 +1339,8 @@ object TextDedup {
     // relation; the heavy lifting is dd09's banded candidate generation,
     // never all-pairs.
     QueryDef("dd18_cluster_size_histogram", (s, d) => {
-      import s.implicits._
       val d200 = docs(s, d).filter(col("doc_id") < 200).select("doc_id")
-      val pairs = minhashBandPairs(docsBounded(s, d, 200), broadcastBands = true)
-      val edges = pairs.select(col("ida"), col("idb")).as[(Long, Long)].rdd
-        .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, 1) }
-      val comp = org.apache.spark.graphx.Graph.fromEdges(edges, 0)
-        .connectedComponents().vertices.toDF("doc_id", "root")
+      val comp = nearDupClusters(s, d)
       val multi = comp.groupBy(col("root")).agg(count(lit(1)).as("csize"))
         .groupBy(col("csize"))
         .agg(count(lit(1)).as("n_clusters"), sum(col("csize")).as("n_docs"))
@@ -2032,7 +2022,7 @@ object TextDedup {
     // assigned per duplicate CLUSTER (hash of the component root), never
     // per document, so near-duplicates cannot straddle a split boundary
     // by construction — the exact contamination dd22 exists to catch.
-    // Shape: LSH candidate pairs (dd03's banded join) → GraphX connected
+    // Shape: LSH candidate pairs (dd03's banded join) → StarCC connected
     // components → every doc (singletons included, via the left join +
     // coalesce to self) keyed by its cluster root → deterministic
     // md5-bucket of the ROOT picks the split (8/1/1), both engines
@@ -2044,13 +2034,7 @@ object TextDedup {
     // cluster-sized (tiny next to the corpus), the assignment is one
     // hash projection, and the ledger is a 3-row aggregate.
     QueryDef("dd26_leakfree_split", (s, d) => {
-      import s.implicits._
-      val pairs = minhashBandPairs(docsBounded(s, d, 200), broadcastBands = true)
-      val edges = pairs.select(col("ida"), col("idb")).as[(Long, Long)].rdd
-        .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, 1) }
-      val cc = org.apache.spark.graphx.Graph.fromEdges(edges, 0)
-        .connectedComponents().vertices
-      val comp = cc.toDF("doc_id", "root")
+      val comp = nearDupClusters(s, d)
       val assigned = docs(s, d).filter(col("doc_id") < 200).select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
         .withColumn("root", coalesce(col("root"), col("doc_id")))

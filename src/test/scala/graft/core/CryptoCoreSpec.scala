@@ -2,6 +2,8 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 class CryptoCoreSpec extends AnyFunSuite {
   private val rng = new scala.util.Random(42)
   private def hex(s: String): Array[Byte] =
@@ -82,6 +84,23 @@ class CryptoCoreSpec extends AnyFunSuite {
       }
       assert(maps.isEmpty, s"${obj.getClass.getName} holds maps: ${maps.map(_.getName)}")
     }
+  }
+
+  // StarCC is graft's one connected-components engine: GraphX may serve
+  // tests as an independent reference, never the library.
+  test("no org.apache.spark.graphx reference under src/main/scala") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("org.apache.spark.graphx") => s"$f:${i + 1}"
+        }
+      }
+    finally walk.close()
+    assert(hits.isEmpty, s"GraphX referenced from src/main: ${hits.mkString(", ")}")
   }
 
   // --- key encodings against the reference's well-known keys

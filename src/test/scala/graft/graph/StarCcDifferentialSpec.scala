@@ -2,17 +2,25 @@ package graft.graph
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.concurrent.{Await, Future, blocking}
 
 /** StarCC against an in-test union-find on seeded random graphs and on the
   * shapes the fixpoint finds hardest: no edges at all, self-loops only,
   * duplicate and reversed edges, a long chain and a wide hub star. Every
   * graph runs through `labels` with `skewSafe` off and on and through
-  * `labelsAuto`; each must return exactly one `(node, root)` row per vertex
-  * incident to a non-loop edge, rooted at its component's minimum id. The
-  * empty and self-loop-only graphs leave every round empty, so the
+  * `labelsAuto`, each on both paths: the distributed rounds (broadcast
+  * threshold -1) and the driver finish (every graph here fits the 10 MB
+  * default). Each run must return exactly one `(node, root)` row per
+  * vertex incident to a non-loop edge, rooted at its component's minimum
+  * id. The empty and self-loop-only graphs leave every round empty, so the
   * convergence certificate observes a zero count and a NULL hash. A few
-  * graphs also run with reliable checkpoints. */
+  * graphs also run with reliable checkpoints. Each path has a session of
+  * its own, so a graph's six runs are independent and run at once. */
 class StarCcDifferentialSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -32,19 +40,34 @@ class StarCcDifferentialSpec extends AnyFunSuite {
     parent.keys.map(v => v -> find(v)).toMap
   }
 
+  private lazy val paths = Seq("distributed" -> "-1", "driver" -> "10MB").map {
+    case (path, threshold) =>
+      val session = spark.newSession()
+      session.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      path -> session
+  }
+
   private def check(name: String, edges: Seq[(Long, Long)], reliable: Boolean = false): Unit = {
-    import spark.implicits._
     val expected = unionFind(edges)
-    val df = edges.toDF("src", "dst")
-    val runs: Seq[(String, DataFrame)] = Seq(
-      "labels" -> StarCC.labels(df, reliable = reliable),
-      "labels(skewSafe)" -> StarCC.labels(df, reliable = reliable, skewSafe = true),
-      "labelsAuto" -> StarCC.labelsAuto(df, reliable = reliable))
-    for ((mode, out) <- runs) {
-      val rows = out.as[(Long, Long)].collect().toSeq
+    val runs = for {
+      (path, session) <- paths
+      (mode, run) <- Seq[(String, DataFrame => DataFrame)](
+        "labels" -> (StarCC.labels(_, reliable = reliable)),
+        "labels(skewSafe)" -> (StarCC.labels(_, reliable = reliable, skewSafe = true)),
+        "labelsAuto" -> (StarCC.labelsAuto(_, reliable = reliable)))
+    } yield Future(blocking {
+      import session.implicits._
+      val out = run(edges.toDF("src", "dst"))
+      // the driver finish returns a local frame, the rounds never do
+      val local = out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+      (s"$name via $mode on the $path path", local == (path == "driver"),
+        out.as[(Long, Long)].collect().toSeq)
+    })
+    for ((on, rightPath, rows) <- Await.result(Future.sequence(runs), 10.minutes)) {
+      assert(rightPath, s"$on: took the other path")
       assert(rows.size == rows.map(_._1).distinct.size,
-        s"$name via $mode: a vertex has more than one label row")
-      assert(rows.toMap == expected, s"$name via $mode: labels differ from union-find")
+        s"$on: a vertex has more than one label row")
+      assert(rows.toMap == expected, s"$on: labels differ from union-find")
     }
   }
 

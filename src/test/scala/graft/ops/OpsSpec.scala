@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-/** Multimodal mapPartitions plumbing, Structured Streaming, and GraphX. */
+/** Multimodal mapPartitions plumbing, Structured Streaming, and the
+  * customer–order graph. */
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
@@ -396,15 +397,16 @@ class OpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("graphx: degrees match SQL group-by; pagerank and CC run") {
+  test("graph: degrees match SQL group-by; one component per customer") {
     val deg = GraphOps.customerDegrees(spark, sf)
     val sqlDeg = spark.read.parquet(s"$sf/orders.parquet")
       .groupBy(col("o_custkey")).agg(count(lit(1)).cast("int").as("n"))
     val joined = deg.join(sqlDeg, deg("c_custkey") === sqlDeg("o_custkey"))
     assert(joined.filter(col("n_orders") =!= col("n")).count() == 0)
     assert(deg.count() == sqlDeg.count())
-    assert(GraphOps.pageRankTop(spark, sf, 5).count() == 5)
-    assert(GraphOps.componentCount(spark, sf) >= 1)
+    // graph03's oracle identity: every order hangs off one customer
+    assert(GraphOps.componentCount(spark, sf) ==
+      spark.read.parquet(s"$sf/customer.parquet").count())
   }
 
   test("multimodal: parsePngBatch walks real chunks and CRC-catches corruption") {
@@ -545,17 +547,5 @@ class OpsSpec extends AnyFunSuite {
       assert(!got(id).intact && got(id).width == 0 && got(id).entropy_sum == 0,
         s"doc $id must get the zeroed sentinel")
     }
-  }
-
-  test("graphx: co-purchase pagerank differentiates customers") {
-    // top-10 can tie (the max-degree clique); differentiation shows over
-    // a wider window — at sf0.001 the projection has ~81 distinct ranks
-    val top = GraphOps.coPurchaseRankTop(spark, sf, 100).collect()
-    assert(top.length == 100)
-    assert(top.map(_.getDouble(1)).distinct.length > 1)
-    // ranked customers are real customers
-    val custs = spark.read.parquet(s"$sf/customer.parquet")
-      .select("c_custkey").collect().map(_.getLong(0)).toSet
-    assert(top.forall(r => custs.contains(r.getLong(0))))
   }
 }

@@ -1,29 +1,51 @@
 package graft.queries
 
 import graft.TestSpark
-import graft.graph.GraphOps
+import graft.graph.{GraphOps, JobBudget, StarCC}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closes graph04's one certificate blind spot (ADVICE r13): the fixpoint
-  * certificate proves the GraphX labeling is no FINER than connectivity
+  * certificate proves the StarCC labeling is no FINER than connectivity
   * (n_cross_edges = 0) and well-anchored, but an over-MERGED labeling (two
   * true components sharing one label) would pass all three checks — its
   * soundness rested on the prose argument that edge-local propagation
   * cannot over-merge. This spec anchors that argument empirically: at
   * sf0.001 an independent in-JVM union-find over the identical edge list
-  * must produce the SAME partition as GraphX connectedComponents — equal
-  * component count AND identical co-membership (same label ⟺ same root).
-  * The recompute is only feasible at test scale; at sf1/sf10 the
-  * certificate carries the guarantee, pinned here against this baseline.
+  * must produce the SAME partition as GraphX connectedComponents and as
+  * StarCC on both of its paths — equal component count AND identical
+  * co-membership (same label ⟺ same root). GraphX lives only in test
+  * scope, as the independent reference. The recompute is only feasible at
+  * test scale; at sf1/sf10 the certificate carries the guarantee, pinned
+  * here against this baseline.
   */
 class GraphCcSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
+  /** GraphX `connectedComponents()` labels of an undirected edge list */
+  private def graphxLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val edges = spark.sparkContext.parallelize(pairs).flatMap { case (a, b) =>
+      Seq(org.apache.spark.graphx.Edge(a, b, 1),
+        org.apache.spark.graphx.Edge(b, a, 1))
+    }
+    org.apache.spark.graphx.Graph.fromEdges(edges, 0)
+      .connectedComponents().vertices.collect().toMap
+  }
+
+  /** StarCC labels of `edges` on the distributed rounds (broadcast
+    * threshold -1) and on the driver finish (the 10 MB default), by path */
+  private def starLabels(edges: DataFrame): Seq[(String, Map[Long, Long])] =
+    Seq("distributed" -> "-1", "driver" -> "10MB").map { case (path, threshold) =>
+      JobBudget.withConf(spark, Seq("spark.sql.autoBroadcastJoinThreshold" -> threshold)) {
+        path -> StarCC.labels(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+    }
+
   test("GraphX CC partition equals union-find partition at sf0.001") {
-    val pairs = GraphOps.coPurchasePairs(spark, sf)
-      .select("src", "dst").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+    val pairsDf = GraphOps.coPurchasePairs(spark, sf).select("src", "dst")
+    val pairs = pairsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "co-purchase projection is empty at sf0.001")
 
     // independent recompute: path-compressing union-find over the edges
@@ -42,15 +64,7 @@ class GraphCcSpec extends AnyFunSuite {
     }
     val ufLabel: Map[Long, Long] = parent.keys.map(v => v -> find(v)).toMap
 
-    // GraphX labeling over the same edge list (graph04's exact kernel)
-    val edges = spark.sparkContext.parallelize(pairs.toSeq).flatMap { case (a, b) =>
-      Seq(org.apache.spark.graphx.Edge(a, b, 1),
-        org.apache.spark.graphx.Edge(b, a, 1))
-    }
-    val gxLabel: Map[Long, Long] =
-      org.apache.spark.graphx.Graph.fromEdges(edges, 0)
-        .connectedComponents().vertices.collect().toMap
-
+    val gxLabel = graphxLabels(pairs.toSeq)
     assert(gxLabel.keySet == ufLabel.keySet, "vertex sets differ")
     val gxComponents = gxLabel.values.toSet.size
     val ufComponents = ufLabel.values.toSet.size
@@ -60,18 +74,22 @@ class GraphCcSpec extends AnyFunSuite {
     // the component-min vertex id, and so does min-root union by rank above
     assert(gxLabel == ufLabel,
       "GraphX labeling diverges from the union-find partition")
+    // graph04's kernel over the same edge list
+    for ((path, star) <- starLabels(pairsDf))
+      assert(star == ufLabel, s"StarCC ($path) diverges from the union-find partition")
   }
 
-  // graph09's DataFrame-native alternating-star CC must produce the exact
-  // cluster relation GraphX CC produces on the same minhash-LSH edge set —
-  // the third leg of the three-way agreement (DuckDB's recursive CTE is
-  // the gate oracle for both queries).
+  // graph09 and dd09 both label dd09's minhash-LSH edge set with StarCC;
+  // GraphX CC on the same edge set is the independent reference (DuckDB's
+  // recursive CTE is the gate oracle for both queries).
   test("alternating-star CC (graph09) equals GraphX CC (dd09) at sf0.001") {
-    val qs = graft.SparkEntry.queries
-    val star = qs("graph09_star_cc")(spark, sf).collect().map(_.toSeq).toSeq
-    val gx = qs("dd09_lsh_cc_clusters")(spark, sf).collect().map(_.toSeq).toSeq
-    assert(star.nonEmpty, "star CC produced no clusters at sf0.001")
-    assert(star == gx, "star CC clusters diverge from GraphX CC clusters")
+    val edges = TextDedup.minhashBandPairs(TextDedup.docsBounded(spark, sf, 200),
+        broadcastBands = true)
+      .select(col("ida").as("src"), col("idb").as("dst"))
+    val gx = graphxLabels(edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    assert(gx.nonEmpty, "dd09's edge set is empty at sf0.001")
+    for ((path, star) <- starLabels(edges))
+      assert(star == gx, s"StarCC ($path) labels diverge from GraphX CC on dd09's edge set")
   }
 
   test("alternating-star CC handles a chain + isolated-pair topology") {

@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** graph13's kernel: the degree-ordered wedge join must count exactly —
   * hand graphs with closed-form counts, robustness to dirty input
   * (duplicates / reversed orientation / self-loops), and agreement with
-  * GraphX `triangleCount()` on the real co-purchase projection (the same
-  * pairing graph05 gates against DuckDB's triple-join, closing the
-  * three-way check for triangles the way GraphCcSpec does for CC). */
+  * GraphX `triangleCount()`, run here in test scope as an independent
+  * reference, on the real co-purchase projection (the same pairing
+  * graph05 gates against DuckDB's triple-join, closing the three-way
+  * check for triangles the way GraphCcSpec does for CC). */
 class TrianglesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
@@ -54,7 +55,12 @@ class TrianglesSpec extends AnyFunSuite {
 
   test("wedge-join count equals GraphX triangleCount on the co-purchase graph") {
     val pairs = GraphOps.coPurchasePairs(spark, sf).select("src", "dst")
-    val gx = GraphOps.coPurchaseTriangles(spark, sf)
+    // GraphX canonicalizes edges itself (self-edges dropped, src<dst
+    // dedup); per-vertex counts sum to 3× the triangle total
+    val gxEdges = pairs.rdd.map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), 1))
+    val gx = org.apache.spark.graphx.Graph.fromEdges(gxEdges, 0)
+      .partitionBy(org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
+      .triangleCount().vertices.map(_._2.toLong).sum().toLong / 3
     val wedge = Triangles.count(pairs)
     assert(wedge == gx, s"wedge join $wedge vs GraphX $gx at sf0.001")
     assert(wedge > 0, "co-purchase projection has no triangles at sf0.001")
