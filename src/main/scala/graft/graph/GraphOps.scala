@@ -21,9 +21,9 @@ object GraphOps {
       .groupBy(col("o_custkey").cast("long").as("c_custkey"))
       .agg(count(lit(1)).as("n_orders"))
 
-  /** Connected components of the customer–order graph. A customer with no
-    * order has no edge, so StarCC never sees it: it counts as a component
-    * of its own. */
+  /** Connected components of the customer–order graph: one per label row
+    * that is its own root, plus one per customer with no order (no edge,
+    * so StarCC never sees it). */
   def componentCount(spark: SparkSession, dir: String): Long = {
     val orders = spark.read.parquet(s"$dir/orders.parquet")
     val lab = StarCC.labels(orders.select(col("o_custkey").as("src"),
@@ -31,9 +31,8 @@ object GraphOps {
     spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey").cast("long").as("node"))
       .join(lab, Seq("node"), "left_anti")
-      .select(col("node").as("root"))
-      .union(lab.select("root"))
-      .distinct().count()
+      .union(lab.where(col("node") === col("root")).select("node"))
+      .count()
   }
 
   /** The customer–customer co-purchase edge list: one edge per customer

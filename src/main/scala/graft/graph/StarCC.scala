@@ -5,7 +5,6 @@ import scala.collection.immutable.ArraySeq
 import org.apache.spark.sql.{DataFrame, GraftShims, Observation}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -31,7 +30,8 @@ import org.apache.spark.sql.types.LongType
   * under the cut the checkpointed edges are collected and finished with an
   * array union-find on the driver ([[driverLabels]]). Below the cut job
   * dispatch is the whole cost of a round, so this path runs two jobs in
-  * total; above it the rounds below run unchanged.
+  * total, keeps two longs per vertex and writes the rows in tasks; above
+  * it the rounds below run unchanged.
   *
   * A round is two jobs: largeStar's output is checkpointed, then
   * smallStar's (tx31's lineage-truncation discipline: iterative lazy plans
@@ -230,12 +230,12 @@ object StarCC {
     * never boxed rows), ranked by sorting, and merged by a union-find over
     * the ranks that always hangs the larger root under the smaller. Rank
     * order is id order, so every root is its component's minimum id, the
-    * labeling the rounds reach. Returns the same `(node, root)` rows as a
-    * local frame whose rows are written straight into UnsafeRows (no
-    * per-row tuple or encoder pass). Driver footprint: the collected
-    * endpoints and their sorted copy (32 B per edge), an int parent per
-    * vertex, and one 2-long UnsafeRow per vertex (~80 B), which the local
-    * scan copies once more when the frame executes. */
+    * labeling the rounds reach. Returns the same `(node, root)` rows as
+    * `min(n, defaultParallelism)` pairs of `long[]` slices (ids, roots) whose
+    * tasks write each row into one reused UnsafeRow, under a local relation's
+    * statistics, so joins broadcast it. Driver footprint: the endpoints and
+    * their sorted copy (32 B per edge) and an int parent per vertex during
+    * the union-find, then two longs per vertex. */
   private def driverLabels(pairs: DataFrame): DataFrame = {
     val parts = pairs.queryExecution.toRdd.mapPartitions { rows =>
       val b = new scala.collection.mutable.ArrayBuilder.ofLong
@@ -257,16 +257,17 @@ object StarCC {
       val (a, b) = (find(rank(ends(i))), find(rank(ends(i + 1))))
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
-    val width = UnsafeRow.calculateBitSetWidthInBytes(2) + 16
-    val rows = Array.tabulate[InternalRow](n) { v =>
-      val r = new UnsafeRow(2)
-      r.pointTo(new Array[Byte](width), width)
-      r.setLong(0, ids(v)); r.setLong(1, ids(find(v)))
-      r
+    val sc = pairs.sparkSession.sparkContext
+    val k = math.max(1, math.min(n, sc.defaultParallelism))
+    val cut = (0 to k).map(i => (i.toLong * n / k).toInt)
+    val slices = cut.zip(cut.tail).map { case (lo, hi) =>
+      (java.util.Arrays.copyOfRange(ids, lo, hi), Array.tabulate(hi - lo)(v => ids(find(lo + v)))) }
+    val rows = sc.parallelize(slices, k).mapPartitions[InternalRow] { it =>
+      val r = UnsafeRow.createFromByteArray(UnsafeRow.calculateBitSetWidthInBytes(2) + 16, 2)
+      for ((node, root) <- it; v <- node.indices.iterator)
+        yield { r.setLong(0, node(v)); r.setLong(1, root(v)); r }
     }
-    GraftShims.dataFrameOf(pairs.sparkSession, LocalRelation(
-      Seq(AttributeReference("node", LongType, nullable = false)(),
-        AttributeReference("root", LongType, nullable = false)()),
-      ArraySeq.unsafeWrapArray(rows)))
+    GraftShims.dataFrameOf(pairs.sparkSession,
+      Seq("node", "root").map(AttributeReference(_, LongType, nullable = false)()), rows, n)
   }
 }

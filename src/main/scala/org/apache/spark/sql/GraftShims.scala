@@ -26,6 +26,24 @@ object GraftShims {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `rows` (fixed-width rows of `output`'s schema, `rowCount` of them) as
+    * a DataFrame whose plan reports the statistics a `LocalRelation` of
+    * the same rows would: `rowCount` and the same per-row size. The
+    * planner therefore broadcasts it into joins under the threshold, while
+    * its rows stay in the RDD's partitions and are written by tasks.
+    * `LogicalRDD`'s second parameter list (session, `originStats`) is
+    * Spark-internal: re-check it on every Spark upgrade, as
+    * [[analysisScope]]. */
+  def dataFrameOf(spark: SparkSession, output: Seq[catalyst.expressions.Attribute],
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow], rowCount: Long): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val stats = catalyst.plans.logical.Statistics(
+      sizeInBytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+        .getSizePerRow(output) * rowCount,
+      rowCount = Some(BigInt(rowCount)))
+    classic.Dataset.ofRows(s, execution.LogicalRDD(output, rows)(s, Some(stats)))
+  }
+
   /** `f` applied to `children` as the expression `spark.udf.register`
     * would build. */
   def scalaUdf(f: expressions.UserDefinedFunction, children: Seq[Expression]): ScalaUDF =

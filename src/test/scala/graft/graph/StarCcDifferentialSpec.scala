@@ -2,7 +2,9 @@ package graft.graph
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -58,9 +60,10 @@ class StarCcDifferentialSpec extends AnyFunSuite {
     } yield Future(blocking {
       import session.implicits._
       val out = run(edges.toDF("src", "dst"))
-      // the driver finish returns a local frame, the rounds never do
-      val local = out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
-      (s"$name via $mode on the $path path", local == (path == "driver"),
+      // the driver finish returns its slices as one RDD leaf; the rounds
+      // return a union
+      val leaf = out.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD]
+      (s"$name via $mode on the $path path", leaf == (path == "driver"),
         out.as[(Long, Long)].collect().toSeq)
     })
     for ((on, rightPath, rows) <- Await.result(Future.sequence(runs), 10.minutes)) {
@@ -96,6 +99,33 @@ class StarCcDifferentialSpec extends AnyFunSuite {
   test("StarCC on a 64-node chain and a 100-leaf hub star") {
     check("chain", (1L until 64L).map(v => (v + 1, v)))
     check("hub star", (1L to 100L).map(v => (50L, v + 50)))
+  }
+
+  test("the driver finish's label frame plans like a local relation") {
+    // a few thousand sparse ids from an RDD, under the benchmark conf
+    val rng = new scala.util.Random(20261019L)
+    val ids = Seq.fill(4000)(rng.nextLong() % 1000000000000L).distinct
+    val edges = Seq.fill(3000)((ids(rng.nextInt(ids.size)), ids(rng.nextInt(ids.size))))
+    val expected = unionFind(edges)
+    JobBudget.withConf(spark, JobBudget.benchConf) {
+      import spark.implicits._
+      val lab = StarCC.labels(spark.sparkContext.parallelize(edges, 4).toDF("src", "dst"))
+      val plan = lab.queryExecution.optimizedPlan
+      assert(plan.isInstanceOf[LogicalRDD], s"took the rounds:\n$plan")
+      assert(plan.stats.rowCount.contains(BigInt(expected.size)), plan.stats.toString)
+      // joined against a table with no size estimate, the labels broadcast
+      val nodes = spark.sparkContext.parallelize(expected.keys.toSeq, 4).toDF("node")
+      val joined = nodes.join(lab, "node")
+      assert(joined.queryExecution.executedPlan.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        joined.queryExecution.executedPlan.toString)
+      assert(joined.as[(Long, Long)].collect().toMap == expected)
+      // graph04's certificate shape: each label row joined to its root's row
+      val self = lab.as("v").join(lab.as("r"), col("v.root") === col("r.node"), "left")
+        .select(col("v.node"), col("v.root"), col("r.root")).as[(Long, Long, Long)].collect()
+      assert(self.length == expected.size)
+      assert(self.map { case (v, r, _) => v -> r }.toMap == expected)
+      assert(self.forall { case (_, r, rr) => rr == r }, "a root does not label itself")
+    }
   }
 
   test("StarCC with reliable checkpoints, two per round, equals union-find") {

@@ -404,9 +404,13 @@ class OpsSpec extends AnyFunSuite {
     val joined = deg.join(sqlDeg, deg("c_custkey") === sqlDeg("o_custkey"))
     assert(joined.filter(col("n_orders") =!= col("n")).count() == 0)
     assert(deg.count() == sqlDeg.count())
-    // graph03's oracle identity: every order hangs off one customer
-    assert(GraphOps.componentCount(spark, sf) ==
-      spark.read.parquet(s"$sf/customer.parquet").count())
+    // graph03's oracle identity: every order hangs off one customer; it
+    // holds on the driver finish and, with the threshold at -1, the rounds
+    val customers = spark.read.parquet(s"$sf/customer.parquet").count()
+    assert(GraphOps.componentCount(spark, sf) == customers)
+    graft.graph.JobBudget.withConf(spark, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      assert(GraphOps.componentCount(spark, sf) == customers, "on the rounds path")
+    }
   }
 
   test("multimodal: parsePngBatch walks real chunks and CRC-catches corruption") {
