@@ -60,33 +60,30 @@ object AgeFormat {
   private val rngTL = ThreadLocal.withInitial[java.security.SecureRandom](
     () => new java.security.SecureRandom())
 
-  private def chacha(mode: Int, key: Array[Byte], nonce: Array[Byte],
-                     data: Array[Byte]): Array[Byte] = {
+  private def cipher(mode: Int, key: Array[Byte], nonce: Array[Byte]): Cipher = {
     val ks = new SecretKeySpec(key, "ChaCha20")
     val iv = new IvParameterSpec(nonce)
     val c0 = cipherTL.get()
-    val c =
-      try { c0.init(mode, ks, iv); c0 }
-      catch {
-        // DECRYPT only (ADVICE r18): the reuse rejection is spurious on the
-        // decrypt path (re-opening the same stanza is legitimate), but on
-        // ENCRYPT it is the JDK's last-line defense against a (key, nonce)
-        // pair actually repeating — an RNG/derivation bug must keep
-        // throwing there, never be silently retried into a nonce reuse.
-        case _: java.security.InvalidKeyException if mode == Cipher.DECRYPT_MODE =>
-          val fresh = Cipher.getInstance("ChaCha20-Poly1305")
-          fresh.init(mode, ks, iv)
-          cipherTL.set(fresh)
-          fresh
-      }
-    c.doFinal(data)
+    try { c0.init(mode, ks, iv); c0 }
+    catch {
+      // DECRYPT only (ADVICE r18): the reuse rejection is spurious on the
+      // decrypt path (re-opening the same stanza is legitimate), but on
+      // ENCRYPT it is the JDK's last-line defense against a (key, nonce)
+      // pair actually repeating — an RNG/derivation bug must keep
+      // throwing there, never be silently retried into a nonce reuse.
+      case _: java.security.InvalidKeyException if mode == Cipher.DECRYPT_MODE =>
+        val fresh = Cipher.getInstance("ChaCha20-Poly1305")
+        fresh.init(mode, ks, iv)
+        cipherTL.set(fresh)
+        fresh
+    }
   }
 
   private def seal(key: Array[Byte], nonce: Array[Byte], pt: Array[Byte]) =
-    chacha(Cipher.ENCRYPT_MODE, key, nonce, pt)
+    cipher(Cipher.ENCRYPT_MODE, key, nonce).doFinal(pt)
 
   private def open(key: Array[Byte], nonce: Array[Byte], ct: Array[Byte]) =
-    chacha(Cipher.DECRYPT_MODE, key, nonce, ct)
+    cipher(Cipher.DECRYPT_MODE, key, nonce).doFinal(ct)
 
   private def chunkNonce(counter: Long, fin: Boolean): Array[Byte] = {
     val n = new Array[Byte](12)
@@ -155,23 +152,26 @@ object AgeFormat {
     rngTL.get().nextBytes(nonce)
     val payloadKey = Hkdf.derive(fileKey, nonce, "payload", 32)
 
-    val out = new ByteArrayOutputStream(
-      header.length + 16 + plaintext.length + TagLen * (plaintext.length / ChunkSize + 1))
-    out.write(header.toString.getBytes(UTF_8))
-    out.write(nonce)
+    // STREAM: every chunk is sealed straight into one pre-sized array
+    val headerBytes = header.toString.getBytes(UTF_8)
+    val chunks = math.max(1, (plaintext.length + ChunkSize - 1) / ChunkSize)
+    val out = new Array[Byte](headerBytes.length + 16 + plaintext.length + TagLen * chunks)
+    System.arraycopy(headerBytes, 0, out, 0, headerBytes.length)
+    System.arraycopy(nonce, 0, out, headerBytes.length, 16)
+    var pos = headerBytes.length + 16
     var off = 0
     var counter = 0L
     var done = false
     while (!done) {
       val n = math.min(ChunkSize, plaintext.length - off)
       val fin = off + n == plaintext.length
-      out.write(seal(payloadKey, chunkNonce(counter, fin),
-        java.util.Arrays.copyOfRange(plaintext, off, off + n)))
+      pos += cipher(Cipher.ENCRYPT_MODE, payloadKey, chunkNonce(counter, fin))
+        .doFinal(plaintext, off, n, out, pos)
       off += n
       counter += 1
       done = fin
     }
-    out.toByteArray
+    out
   }
 
   // --- ASCII armor (age spec: strict PEM-style, 64-column base64 body).
@@ -378,7 +378,7 @@ object AgeFormat {
   /** Shared header-MAC check + STREAM payload tail of both decrypt paths. */
   private def finishDecrypt(ciphertext: Array[Byte], h: Header,
                             fileKey: Array[Byte]): Array[Byte] = {
-    var pos = h.payloadPos
+    val pos = h.payloadPos
     // --- verify header MAC
     val hmacKey = Hkdf.derive(fileKey, Array.emptyByteArray, "header", 32)
     val expect = Hkdf.hmacSha256(hmacKey, (h.headerText + "---").getBytes(UTF_8))
@@ -387,27 +387,22 @@ object AgeFormat {
     // --- payload
     if (ciphertext.length - pos < 16 + TagLen) fail("truncated payload")
     val nonce = java.util.Arrays.copyOfRange(ciphertext, pos, pos + 16)
-    pos += 16
     val payloadKey = Hkdf.derive(fileKey, nonce, "payload", 32)
-    val out = new ByteArrayOutputStream(ciphertext.length - pos)
-    var counter = 0L
-    var remaining = ciphertext.length - pos
-    while (remaining > ChunkSize + TagLen) {
-      val ct = java.util.Arrays.copyOfRange(ciphertext, pos, pos + ChunkSize + TagLen)
-      out.write(try open(payloadKey, chunkNonce(counter, fin = false), ct) catch {
-        case _: Exception => fail("payload chunk authentication failed")
-      })
-      pos += ChunkSize + TagLen
-      remaining -= ChunkSize + TagLen
-      counter += 1
-    }
-    if (remaining < TagLen) fail("truncated payload")
-    val last = java.util.Arrays.copyOfRange(ciphertext, pos, ciphertext.length)
-    val pt = try open(payloadKey, chunkNonce(counter, fin = true), last) catch {
-      case _: Exception => fail("payload chunk authentication failed")
-    }
-    if (pt.isEmpty && counter > 0) fail("empty final chunk in multi-chunk payload")
-    out.write(pt)
-    out.toByteArray
+    // STREAM: every chunk is opened straight into one pre-sized array;
+    // all chunks but the last are full, the last holds 0..ChunkSize bytes
+    val start = pos + 16
+    val full = (ciphertext.length - start - 1) / (ChunkSize + TagLen)
+    val lastLen = ciphertext.length - start - full * (ChunkSize + TagLen)
+    val out = new Array[Byte](full * ChunkSize + math.max(0, lastLen - TagLen))
+    def openChunk(i: Int, len: Int): Int =
+      try cipher(Cipher.DECRYPT_MODE, payloadKey, chunkNonce(i, fin = i == full))
+        .doFinal(ciphertext, start + i * (ChunkSize + TagLen), len, out, i * ChunkSize)
+      catch { case _: Exception => fail("payload chunk authentication failed") }
+    var i = 0
+    while (i < full) { openChunk(i, ChunkSize + TagLen); i += 1 }
+    if (lastLen < TagLen) fail("truncated payload")
+    if (openChunk(full, lastLen) == 0 && full > 0)
+      fail("empty final chunk in multi-chunk payload")
+    out
   }
 }

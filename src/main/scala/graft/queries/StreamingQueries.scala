@@ -717,7 +717,10 @@ object StreamingQueries {
         // so the serve really runs per-batch (stream14 discipline)
         feed.grouped(4).foreach { g => mem.addData(g); q.processAllAvailable() }
       } finally q.stop()
-      s.read.parquet(s"$outDir/b*").orderBy("qid", "rank")
+      // the batch dirs by name, not a `b*` glob: Spark's sink-metadata
+      // probe stats a single path and logs a stack trace for a glob
+      val batches = new java.io.File(outDir).listFiles().filter(_.getName.startsWith("b")).map(_.getPath)
+      s.read.parquet(batches.toSeq: _*).orderBy("qid", "rank")
     }, // the oracle IS sim17's, shared verbatim: stream serve must equal
        // batch serve must equal the DuckDB recompute
       Similarity.defs.find(_.name == "sim17_ann_index_serve").get.oracle),

@@ -247,6 +247,8 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator tier: logical TopKPerGroup → partial/final bounded-heap
     // physical pair (see graft.plans.TopKPerGroup scaladoc)
     extensions.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    // a global sort of a broadcast-sized input: one task, no range sampling
+    extensions.injectPlannerStrategy(_ => graft.plans.SmallGlobalSort)
     GraftSparkExtensions.natives.foreach(f => extensions.injectFunction(f.description))
     extensions.injectTableFunction(AgeFunctions.secretsTable.description)
   }

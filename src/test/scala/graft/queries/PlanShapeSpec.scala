@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, TestSpark}
+import graft.graph.JobBudget
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression gate: the scale properties the 100 TB design
@@ -659,5 +660,63 @@ class PlanShapeSpec extends AnyFunSuite {
       .queryExecution.analyzed.toString
     assert(!analyzed.contains("ResolvedHint"),
       "dd27 re-grew an unconditional broadcast hint — the bench side must stay size-based")
+  }
+
+  // ---- SmallGlobalSort on the benchmark's conf: a global sort whose input
+  // fits the broadcast budget runs in one task behind a single-partition
+  // exchange, so no RangePartitioner sampling job recomputes its input
+
+  /** (executed plan, jobs) of `name` written to the noop sink, as Bench runs it */
+  private def benchRun(name: String, conf: Seq[(String, String)]): (String, Int) =
+    JobBudget.withConf(spark, conf) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val plan = df.queryExecution.executedPlan.toString
+      val (jobs, _, _) = JobBudget.measure(spark, s"small-sort-$name") {
+        df.write.format("noop").mode("overwrite").save()
+      }
+      (plan, jobs)
+    }
+
+  private val sortsOff = JobBudget.benchConf :+ ("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  test("small global sorts gather to one partition: no range sampling job (bench conf)") {
+    for (name <- Seq("q01_agg_pricing", "age10_kernel_64mb")) {
+      val (plan, jobs) = benchRun(name, JobBudget.benchConf)
+      assert(plan.contains("Exchange SinglePartition") && !plan.contains("rangepartitioning"),
+        s"$name's ORDER BY is range-partitioned again:\n$plan")
+      assert(jobs == 1, s"$name ran $jobs jobs, expected 1")
+      val (offPlan, offJobs) = benchRun(name, sortsOff)
+      assert(offPlan.contains("rangepartitioning"),
+        s"$name with the threshold at -1 must keep Spark's range sort:\n$offPlan")
+      assert(offJobs == 2, s"$name with the threshold at -1 ran $offJobs jobs, expected 2")
+    }
+  }
+
+  test("small global sorts leave ORDER BY LIMIT and inputs above the budget alone") {
+    JobBudget.withConf(spark, JobBudget.benchConf) {
+      val q03 = physicalPlan("q03_join_topn")
+      assert(q03.contains("TakeOrderedAndProject") && !q03.contains("SinglePartition"),
+        s"q03 lost its bounded top-k:\n$q03")
+      // 8 GB estimated (spark.range's 8 B per row): above the 64 MB budget
+      val big = spark.range(1000000000L).orderBy(org.apache.spark.sql.functions.col("id").desc)
+        .queryExecution.executedPlan.toString
+      assert(big.contains("rangepartitioning") && !big.contains("SinglePartition"),
+        s"a sort above the budget must stay range-partitioned:\n$big")
+    }
+  }
+
+  test("small global sorts return the range sort's rows in its order") {
+    for (name <- Seq("q01_agg_pricing", "q08_window_running", "q25_events_hourly",
+                     "tx01_tokens", "dd01_exact_dup_groups")) {
+      def rows(conf: Seq[(String, String)]) = JobBudget.withConf(spark, conf) {
+        val df = SparkEntry.queries(name)(spark, sf)
+        (df.queryExecution.executedPlan.toString, df.collect().toSeq)
+      }
+      val (plan, on) = rows(JobBudget.benchConf)
+      val (offPlan, off) = rows(sortsOff)
+      assert(plan.contains("Exchange SinglePartition") && offPlan.contains("rangepartitioning"),
+        s"$name does not compare the two sorts:\n$plan\n$offPlan")
+      assert(on.nonEmpty && on == off, s"$name's rows differ between the two sorts")
+    }
   }
 }
