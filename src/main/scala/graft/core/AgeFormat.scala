@@ -18,7 +18,8 @@ final class AgeInvalidInputException(msg: String) extends RuntimeException(msg)
   *
   * Functional mirror of /root/reference rust/src/lib.rs:40-110 (encrypt),
   * :145-212 (decrypt), :214-304 (multi-recipient) — re-implemented on
-  * `javax.crypto` (X25519 ECDH + HKDF-SHA256 + ChaCha20-Poly1305), no FFI.
+  * graft's [[X25519]] and `javax.crypto` (HKDF-SHA256, ChaCha20-Poly1305),
+  * no FFI.
   */
 object AgeFormat {
   private val V1Line = "age-encryption.org/v1"
@@ -57,8 +58,6 @@ object AgeFormat {
   // once — a genuinely bad key fails again from the fresh instance.
   private val cipherTL = ThreadLocal.withInitial[Cipher](
     () => Cipher.getInstance("ChaCha20-Poly1305"))
-  private val rngTL = ThreadLocal.withInitial[java.security.SecureRandom](
-    () => new java.security.SecureRandom())
 
   private def cipher(mode: Int, key: Array[Byte], nonce: Array[Byte]): Cipher = {
     val ks = new SecretKeySpec(key, "ChaCha20")
@@ -102,8 +101,7 @@ object AgeFormat {
     * only header stanzas (reference claim FUNCTIONS.md:468). */
   def encrypt(plaintext: Array[Byte], recipients: Seq[Array[Byte]]): Array[Byte] = {
     require(recipients.nonEmpty, "at least one recipient")
-    val fileKey = new Array[Byte](16)
-    rngTL.get().nextBytes(fileKey)
+    val fileKey = Entropy.bytes(16)
 
     val header = new StringBuilder
     header.append(V1Line).append('\n')
@@ -125,10 +123,8 @@ object AgeFormat {
   def encryptWithPassphrase(plaintext: Array[Byte], passphrase: String,
                             logN: Int = 14): Array[Byte] = {
     require(logN >= 1 && logN <= MaxScryptLogN, s"logN must be in [1, $MaxScryptLogN]")
-    val fileKey = new Array[Byte](16)
-    rngTL.get().nextBytes(fileKey)
-    val salt = new Array[Byte](16)
-    rngTL.get().nextBytes(salt)
+    val fileKey = Entropy.bytes(16)
+    val salt = Entropy.bytes(16)
     val key = Scrypt.derive(passphrase.getBytes(UTF_8),
       ScryptSaltLabel.getBytes(UTF_8) ++ salt, 1 << logN, 8, 1, 32)
     val wrapped = seal(key, new Array[Byte](12), fileKey)
@@ -148,8 +144,7 @@ object AgeFormat {
     val mac = Hkdf.hmacSha256(hmacKey, macInput)
     header.append("--- ").append(b64e.encodeToString(mac)).append('\n')
 
-    val nonce = new Array[Byte](16)
-    rngTL.get().nextBytes(nonce)
+    val nonce = Entropy.bytes(16)
     val payloadKey = Hkdf.derive(fileKey, nonce, "payload", 32)
 
     // STREAM: every chunk is sealed straight into one pre-sized array

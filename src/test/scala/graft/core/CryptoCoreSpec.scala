@@ -57,9 +57,9 @@ class CryptoCoreSpec extends AnyFunSuite {
   }
 
   // DH symmetry on random keys: a·(b·9) == b·(a·9). derivePublic and
-  // sharedSecret are one JDK XDH path, so this pins derivation to DH; the
-  // RFC 7748 §6.1 vectors above and the testkit vectors pin both to other
-  // implementations.
+  // sharedSecret are one ladder, so this pins derivation to DH; the RFC 7748
+  // §6.1 vectors above, the testkit vectors and X25519DifferentialSpec's
+  // JDK reference pin both to other implementations.
   test("x25519 DH symmetry on random scalar pairs; derivePublic clamps") {
     val rnd = new scala.util.Random(1234)
     def scalar() = Array.fill[Byte](32)(rnd.nextInt(256).toByte)
@@ -86,21 +86,40 @@ class CryptoCoreSpec extends AnyFunSuite {
     }
   }
 
-  // StarCC is graft's one connected-components engine: GraphX may serve
-  // tests as an independent reference, never the library.
-  test("no org.apache.spark.graphx reference under src/main/scala") {
+  /** `file:line` of every src/main/scala line that `hit` matches. */
+  private def mainSourceHits(hit: (java.nio.file.Path, String) => Boolean): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"${root.toAbsolutePath} not found")
     val walk = java.nio.file.Files.walk(root)
-    val hits = try walk.iterator().asScala.toSeq
+    try walk.iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
       .flatMap { f =>
         java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("org.apache.spark.graphx") => s"$f:${i + 1}"
+          case (line, i) if hit(f, line) => s"$f:${i + 1}"
         }
       }
     finally walk.close()
+  }
+
+  // StarCC is graft's one connected-components engine: GraphX may serve
+  // tests as an independent reference, never the library.
+  test("no org.apache.spark.graphx reference under src/main/scala") {
+    val hits = mainSourceHits((_, line) => line.contains("org.apache.spark.graphx"))
     assert(hits.isEmpty, s"GraphX referenced from src/main: ${hits.mkString(", ")}")
+  }
+
+  // X25519.scala is graft's one curve implementation: the JDK's XDH
+  // provider may serve tests as a reference (X25519DifferentialSpec), never
+  // the library. Sum128Agg formats its 128-bit sums as decimal through
+  // BigInteger once per group; that is its only allowed use.
+  test("no JDK XDH provider or BigInteger curve code under src/main/scala") {
+    val xdh = Seq("KeyAgreement", "KeyFactory", "KeyPairGenerator",
+      "XECPrivateKeySpec", "XECPublicKeySpec")
+    val hits = mainSourceHits { (f, line) =>
+      xdh.exists(line.contains) ||
+        (line.contains("BigInteger") && f.getFileName.toString != "Sum128Agg.scala")
+    }
+    assert(hits.isEmpty, s"second curve path in src/main: ${hits.mkString(", ")}")
   }
 
   // --- key encodings against the reference's well-known keys

@@ -14,10 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the MAC input framing (header through the stanzas + "---") written
   *     from the spec text;
   *   - public-key derivation via KeyAgreement WITH THE BASE POINT
-  *     (priv·9 = public u-coordinate). Production's X25519.derivePublic
-  *     rides the same JDK provider, so derivation is NOT independent
-  *     here: it is pinned by the RFC 7748 §6.1 vectors (CryptoCoreSpec)
-  *     and the Python twin's (`cryptography`) testkit vectors.
+  *     (priv·9 = public u-coordinate). This is independent of production:
+  *     the micro-impl uses the JDK's XDH provider, while
+  *     X25519.derivePublic runs graft's own ladder (X25519.scala).
   *
   * For every X25519 success vector in the testkit the micro-impl parses
   * the header bytes itself, unwraps the file key, recomputes the MAC and
@@ -26,8 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the class the differential fuzz cannot see) would have to be
   * independently repeated a third time here to slip through.
   *
-  * Residual sharing, documented: the JDK XDH provider for the two curve
-  * ops (curve arithmetic is not the target surface), java.util.Base64,
+  * Residual sharing, documented: java.util.Base64,
   * ChaCha20-Poly1305 via Cipher for the single unwrap, and
   * AgeKeys.parseIdentity for bech32 (key encoding is pinned separately by
   * the testkit's keygen vectors).
@@ -80,7 +78,7 @@ class MicroHeaderMacSpec extends AnyFunSuite {
     ka.init(priv); ka.doPhase(pub, true)
     ka.generateSecret()
   }
-  /** priv·basepoint via KeyAgreement (the JDK provider, as in production). */
+  /** priv·basepoint via KeyAgreement (the JDK provider, not production's ladder). */
   private def pubOf(scalar: Array[Byte]): Array[Byte] = {
     val base = new Array[Byte](32); base(0) = 9
     dh(scalar, base)
