@@ -34,7 +34,7 @@ object Bench {
     * bench JSON so a round artifact carries its own noise context: steal
     * storms on shared hosts measured 3-4× wall inflation on exchange-heavy
     * queries with zero local load (BENCH_SCALING r17). */
-  private def stealJiffies(): Long =
+  private[graft] def stealJiffies(): Long =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
       try src.getLines().find(_.startsWith("cpu "))
@@ -42,24 +42,22 @@ object Bench {
       finally src.close()
     } catch { case _: Exception => -1L }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-    // tables may be single files OR directories of part files (the
-    // multi-file corpus twin, tools/split_corpus.py) — size recursively
+  /** Parquet bytes under `dir`: tables may be single files OR directories
+    * of part files (the multi-file corpus twin, tools/split_corpus.py). */
+  private[graft] def corpusBytes(dir: String): Long = {
     def sizeOf(f: java.io.File): Long =
       if (f.isDirectory)
         Option(f.listFiles).map(_.toSeq).getOrElse(Seq.empty).map(sizeOf).sum
       else f.length
-    val totalBytes = {
-      val root = new java.io.File(sfDir)
-      val fs = Option(root.listFiles).map(_.toSeq).getOrElse(Seq.empty)
-      fs.filter(_.getName.endsWith(".parquet")).map(sizeOf).sum
-    }
+    Option(new java.io.File(dir).listFiles).map(_.toSeq).getOrElse(Seq.empty)
+      .filter(_.getName.endsWith(".parquet")).map(sizeOf).sum
+  }
 
-    // SPARK_GRAFT_MASTER: same cluster-mode lane as Verify (CLUSTER.md)
-    val spark = SparkSession.builder()
+  /** Bench's static confs. SPARK_GRAFT_MASTER: Verify's cluster lane (CLUSTER.md) */
+  private[graft] def session(cpus: Int): SparkSession =
+    SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .withExtensions(new graft.sql.GraftSparkExtensions)
       .config("spark.sql.session.timeZone", "UTC")
@@ -79,35 +77,40 @@ object Bench {
       // same writer as the cluster.
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
-    // Size the session to a corpus (runtime-settable confs only), here for
-    // the primary dir and again per measured dir. Shuffle to the data, not
-    // to a constant: ~8 MB of input per shuffle partition, clamped to
-    // [4, 2*cores]. At sf0.1 (~17 MB total) that yields 4 partitions — a
-    // 32-partition shuffle there is pure task-dispatch overhead (measured:
-    // total drops 5.7s -> ~2.5s; VERDICT r1); beyond 2x cores extra
-    // partitions only add dispatch cost on one machine (sp=200 at sf10 is
-    // ~40% slower than sp=64 on the count-distinct shape), and on a real
-    // cluster AQE picks the reduce-side parallelism anyway. Small inputs
-    // split scans finer than the 128 MB default so all cores participate;
-    // compute-dense narrow tables (documents/embeddings) are only a few MB
-    // even when row counts are large, so scans are forced to split and one
-    // core never owns a whole table (tx01 at sf1: 1 scan task = 5x
-    // slowdown). AQE's per-stage re-planning costs ~70ms/query at toy
-    // scale (measured) but wins once shuffles are big enough to be worth
-    // coalescing/re-planning; 256 MB input was the measured crossover on
-    // the sf grid.
-    def tuneFor(bytes: Long): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(4L, math.min(bytes / (8L << 20), cpus.toInt * 2L)).toString)
-      spark.conf.set("spark.sql.files.maxPartitionBytes",
-        math.max(8L << 20, bytes / (cpus.toInt * 3L)).toString)
-      spark.conf.set("spark.sql.files.minPartitionNum",
-        math.max(1L, math.min(bytes / (4L << 20), cpus.toLong)).toString)
-      spark.conf.set("spark.sql.adaptive.enabled", (bytes > (256L << 20)).toString)
-    }
-    tuneFor(totalBytes)
+  /** Sizes the session to a corpus (runtime-settable confs only); Bench
+    * calls it for the primary dir and again per measured dir. Shuffle to
+    * the data, not to a constant: ~8 MB of input per shuffle partition,
+    * clamped to [4, 2*cores]. At sf0.1 (~17 MB total) that yields 4
+    * partitions — a 32-partition shuffle there is pure task-dispatch
+    * overhead (measured: total drops 5.7s -> ~2.5s; VERDICT r1); beyond
+    * 2x cores extra partitions only add dispatch cost on one machine
+    * (sp=200 at sf10 is ~40% slower than sp=64 on the count-distinct
+    * shape), and on a real cluster AQE picks the reduce-side parallelism
+    * anyway. Small inputs split scans finer than the 128 MB default so all
+    * cores participate; compute-dense narrow tables (documents/embeddings)
+    * are only a few MB even when row counts are large, so scans are forced
+    * to split and one core never owns a whole table (tx01 at sf1: 1 scan
+    * task = 5x slowdown). AQE's per-stage re-planning costs ~70ms/query at
+    * toy scale (measured) but wins once shuffles are big enough to be
+    * worth coalescing/re-planning; 256 MB input was the measured crossover
+    * on the sf grid. */
+  private[graft] def tuneFor(spark: SparkSession, bytes: Long, cpus: Int): Unit = {
+    spark.conf.set("spark.sql.shuffle.partitions",
+      math.max(4L, math.min(bytes / (8L << 20), cpus * 2L)).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      math.max(8L << 20, bytes / (cpus * 3L)).toString)
+    spark.conf.set("spark.sql.files.minPartitionNum",
+      math.max(1L, math.min(bytes / (4L << 20), cpus.toLong)).toString)
+    spark.conf.set("spark.sql.adaptive.enabled", (bytes > (256L << 20)).toString)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val totalBytes = corpusBytes(sfDir)
+    val spark = session(cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    tuneFor(spark, totalBytes, cpus)
 
     val qs = SparkEntry.queries
     def exec(name: String, dir: String = sfDir): Boolean =
@@ -150,12 +153,9 @@ object Bench {
     val sf1Dir = sys.env.get("SPARK_GRAFT_SF1_DIR")
       .orElse(Some("/root/repo/localdata/sf1")
         .filter(p => totalBytes < (256L << 20) && new java.io.File(p).isDirectory))
-    val sf1Bytes = sf1Dir.map { d1 =>
-      val fs = Option(new java.io.File(d1).listFiles).map(_.toSeq).getOrElse(Seq.empty)
-      fs.filter(_.getName.endsWith(".parquet")).map(sizeOf).sum
-    }
+    val sf1Bytes = sf1Dir.map(corpusBytes)
     sf1Dir.foreach { d1 => // warm the sf1 lane once, under its own sizing
-      tuneFor(sf1Bytes.getOrElse(0L))
+      tuneFor(spark, sf1Bytes.getOrElse(0L), cpus)
       headline.filter(qs.contains).foreach(n => exec(n, d1))
     }
 
@@ -192,9 +192,9 @@ object Bench {
     }
     def attemptOnce(): Attempt = {
       val a0 = stealJiffies()
-      tuneFor(totalBytes)
+      tuneFor(spark, totalBytes, cpus)
       val res = timedPass(sfDir)
-      val r1 = sf1Dir.map { d1 => tuneFor(sf1Bytes.getOrElse(0L)); timedPass(d1) }
+      val r1 = sf1Dir.map { d1 => tuneFor(spark, sf1Bytes.getOrElse(0L), cpus); timedPass(d1) }
       val a1 = stealJiffies()
       val delta = if (a0 >= 0 && a1 >= 0) a1 - a0 else -1L
       Attempt(res, r1, delta, delta >= 0 && delta <= stealMax)

@@ -79,7 +79,7 @@ object SubstringRunFps {
     * 32-char hex — a BIJECTION of the hex fp, so any grouping/join/
     * partitioning on it is semantically identical while the exchange
     * cargo and sort comparators are half the size (measured: dd25's fp
-    * window 1.64 → 1.19 s at sf10m on cargo alone, Dd25Probe variant F).
+    * window 1.64 → 1.19 s at sf10m on cargo alone, r16 variant F).
     * Called from both interpreted eval and generated code. */
   def compute(s: UTF8String, w: Int, bin: Boolean): GenericArrayData = {
     val b = s.getBytes

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.LongType
   * stars rooted at component minima (min-label semantics, gate-checked
   * against a DuckDB recursive min-label CTE by graph09 and dd09; GraphX
   * `connectedComponents()` stays in test scope as an independent
-  * reference: GraphCcSpec, and label-level equality at scale in
-  * Graph09Probe).
+  * reference in GraphCcSpec, and StarCcDifferentialSpec checks labels
+  * against an in-test union-find).
   *
   * Graphs that fit the session's broadcast budget (16 B per edge against
   * `spark.sql.autoBroadcastJoinThreshold`; a threshold ≤ 0 disables it)
@@ -66,8 +66,8 @@ object StarCC {
     * rewrites `SMJ(Sort(ShuffleRead), Sort(ShuffleRead))`; in the direct
     * composition the mins side has its final HashAggregate BETWEEN the
     * exchange and the join, so a power-law hub partition on the edge side
-    * can never be skew-split (measured: StarCcSkewProbe's 10%-hub graph,
-    * skew=true absent from every round-1 join). A same-key repartition is
+    * can never be skew-split (r16's 10%-hub graph: skew=true absent from
+    * every round-1 join; StarCcDifferentialSpec checks both plans). A same-key repartition is
     * elided as redundant by the optimizer, so the barrier is a LAZY
     * partitioning break: project the join key through `greatest(u,u)` —
     * value-identical, but an expression rather than an attribute, so the
@@ -107,8 +107,8 @@ object StarCC {
     * profile ([[skewDecision]]) instead of a caller flag — the "auto"
     * mode VERDICT r17 asked for. The edge list is localCheckpointed FIRST
     * so the (possibly expensive) upstream pipeline runs once for both the
-    * decision pre-agg and the fixpoint; StarCcSkewProbe asserts the
-    * decision picks safe on the 10%-hub graph and default on uniform. */
+    * decision pre-agg and the fixpoint; GraphCcSpec asserts the decision
+    * picks safe on a hub star and default on a uniform path. */
   def labelsAuto(edges: DataFrame, maxIter: Int = 50,
                  reliable: Boolean = false, threshold: Double = 0.02): DataFrame = {
     if (reliable) require(edges.sparkSession.sparkContext.getCheckpointDir.isDefined,

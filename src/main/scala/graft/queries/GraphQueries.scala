@@ -330,7 +330,7 @@ object GraphQueries {
     // as dd09 and emits the SAME (root, n_docs, max_doc) relation, checked
     // against DuckDB's recursive min-label CTE; GraphCcSpec checks StarCC
     // on this edge set, on both paths, against GraphX in test scope, and
-    // Graph09Probe does so at sf1 on the full co-purchase graph.
+    // on graph04's co-purchase graph against a union-find.
     QueryDef("graph09_star_cc", (s, d) => TextDedup.nearDupClusterSizes(s, d), Some(s"""
       WITH RECURSIVE docs200 AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
       ${TextDedup.minhashPairsSql("docs200")},
@@ -343,8 +343,8 @@ object GraphQueries {
     // invariant by residue: vertices v = c_custkey % 20000; chain edges
     // (v, v%50) hang every vertex under its residue-class rep; hub edges
     // (0, v) for v%50 ∈ {13,27,41} pour ~6% of all edges onto vertex 0 —
-    // the power-law shape StarCcSkewProbe proved AQE can now skew-split
-    // under skewSafe (BENCH_SCALING r17). Components are closed-form:
+    // the power-law shape AQE can now skew-split under skewSafe
+    // (BENCH_SCALING r17; StarCcDifferentialSpec checks the split). Components are closed-form:
     // classes {0,13,27,41} merge under root 0, every other class r roots
     // at r — so the oracle is pure arithmetic (no recursive CTE, unlike
     // graph09's), and what the gate checks is that the skewSafe rounds
@@ -357,8 +357,8 @@ object GraphQueries {
     // run at every sf. src is written
     // pmod(v,1) (= 0 for the non-negative keys) rather than lit(0): a
     // literal alias under Union trips Spark 4.1's constraint rewriting
-    // (key not found: src#N — StarCcSkewProbe hit it; probe disables
-    // propagation, a gate query must not need session surgery). r18
+    // (key not found: src#N — hit in r16; a gate query must not need
+    // session surgery to avoid it). r18
     // (ADVICE r17): the hub root 0 is a graph vertex BY
     // CONSTRUCTION (verts ∪ {0}, mirrored in the oracle) instead of
     // relying on 0-based custkeys, and the result counts over VERTS with
@@ -376,7 +376,7 @@ object GraphQueries {
     // the lazy re-exchange barrier when a hub concentrates > 2% of
     // endpoints. On this graph the hub carries ~4% (decision: safe); on
     // a uniform graph the share is ~1/V (decision: default) — both
-    // directions probe-asserted in StarCcSkewProbe. Oracle: the same
+    // directions asserted in GraphCcSpec. Oracle: the same
     // closed form as graph10, so auto-mode label-exactness is gated at
     // every sf alongside the explicit-flag path.
     QueryDef("graph11_auto_skew_cc", (s, d) => {
@@ -552,7 +552,7 @@ object GraphQueries {
     // MATERIALIZED pins one derivation and the sf10 oracle completes in
     // ~250 s inside the sweep's 600 s budget. Per-row fp < 1e9, per-bucket
     // sums far inside int64 at every sf. Cross-checked label-for-label
-    // against GraphX staticPageRank at sf1 by Graph15Probe (rank vectors
+    // against GraphX staticPageRank at sf1 in r19 (rank vectors
     // agree to float precision after fixed-point rescaling).
     QueryDef("graph15_pagerank_natural_cert", (s, d) => {
       integerPageRank(s, d, custMod = 4)

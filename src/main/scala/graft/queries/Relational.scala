@@ -21,7 +21,7 @@ object Relational {
 
   /** Size-aware fact-join hint (r16): `shuffle_hash` only when the build
     * table is too big to broadcast. The hardcoded hint was tuned at sf10
-    * (SHJ beats SMJ there, 6.0→4.4 s — Q03Tune) but a hint OVERRIDES the
+    * (SHJ beats SMJ there, 6.0→4.4 s — r12) but a hint OVERRIDES the
     * planner, so at small scale it forced a two-sided fact shuffle where
     * a few-MB broadcast wins outright — exactly the size-based choice a
     * cost-based planner makes, keyed on the same statistic Catalyst's
@@ -94,7 +94,7 @@ object Relational {
     // 8×15 MB merge on the critical path ahead of the fact-scan probe,
     // and a 16 MB probe target falls out of per-core cache for the 60M
     // might_contain calls. 2 MB is L2-resident; measured at sf10
-    // (R22TuneBloom, interleaved, 5 quiet rounds): min 3.629 → 3.323 s,
+    // (r22, interleaved, 5 quiet rounds): min 3.629 → 3.323 s,
     // best in 4/5 rounds, results identical (the bloom is advisory —
     // false positives drop at the join). Scale-safe: the bloom's
     // operating window is bounded above by creationSideThreshold (512 MB
@@ -191,7 +191,7 @@ object Relational {
     // Lineitem revenue is pre-aggregated by orderkey BEFORE the orders
     // join: the shuffle then carries one narrow row per order instead of
     // ~4 wide lineitem rows, and the orderkey join reuses the aggregate's
-    // partitioning (measured 2.0x at sf10 — Q03Tune; VERDICT r2 item 7).
+    // partitioning (measured 2.0x at sf10 in r12; VERDICT r2 item 7).
     // Trade-off documented there: this aggregates lineitem for orders the
     // date/segment filter later drops, the right trade when the filter is
     // non-selective (here <1999-01-01 keeps nearly all orders); a highly
@@ -206,7 +206,7 @@ object Relational {
       // wrong shape at every scale, and the lrev side is ALREADY hash-
       // partitioned on l_orderkey by the aggregate's exchange, so the
       // hash join adds only the orders-side exchange (A/B interleaved,
-      // R21TuneJoins: sf1 min 1.08 -> 0.72 s across two sittings, sf0.1
+      // r21: sf1 min 1.08 -> 0.72 s across two sittings, sf0.1
       // med 0.76 -> 0.72 s). SHJ build side spills/AQE-skew-splits the
       // same as q05's hinted joins at cluster scale.
       val o = t(s, d, "orders").filter(col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
@@ -253,7 +253,7 @@ object Relational {
     // customer) are the strictly smaller relation, so hashing one
     // partition of them always fits where the sort-merge sort buffers
     // would, and skipping both sorts is measured 6.0 -> 4.4 s at sf10
-    // (Q03Tune). AQE skew-split applies to shuffled hash joins too, so
+    // (r12). AQE skew-split applies to shuffled hash joins too, so
     // the 100 TB skew story is unchanged.
     //
     // r17: runtime bloom-filter injection is ON for this query (q61's
@@ -263,7 +263,7 @@ object Relational {
     // way it would see the 100 TB scan). The date filter on orders kills
     // ~70% of orderkeys, so might_contain at the lineitem scan drops those
     // rows BEFORE the fact exchange: measured 831→496 MB shuffled and
-    // best 5.3→4.4 s at sf10m (R17Tune q05 lane, interleaved). The
+    // best 5.3→4.4 s at sf10m (r17 q05 lane, interleaved). The
     // application-side gate is recalibrated (10 GB → 256 MB), not
     // disabled: below ~256 MB of probe-side scan the per-row
     // might_contain + the bloom-build subquery cost more than the bytes
@@ -279,7 +279,7 @@ object Relational {
       // Session setup shared with q61 (bloomChildSession).
       val s = bloomChildSession(s0)
       val r = t(s, d, "region"); val n = t(s, d, "nation")
-      // r21 A/B (R21TuneQ05, interleaved in one JVM): pre-joining
+      // r21 A/B (interleaved in one JVM): pre-joining
       // nation/region INTO customer (dims probed per customer row, 2
       // fewer BHJs on the fact path) measured SLOWER at bench scale
       // (sf0.1 med 0.69 -> 0.82 s; sf1 a wash) — the nested broadcasts
@@ -1978,7 +1978,7 @@ object Relational {
     * file buckets) and the planner can then replace the distribution-
     * satisfied hash aggregate with a streaming SortAggregate — no 15M-
     * entry hash table, no partial/final double hashing, measured
-    * 0.60 → 0.43 s on the sf10m per-order revenue aggregate (R16Tune).
+    * 0.60 → 0.43 s on the sf10m per-order revenue aggregate (r16).
     * Scoped to a child session (q61's pattern) because the ordering
     * flag is only sound under the one-file-per-bucket invariant our
     * builders guarantee. */
@@ -1990,9 +1990,9 @@ object Relational {
   }
 
   /** One-time orderkey-bucketed layout build shared by q59/q60 and the
-    * R14Tune measurement harness — `nb` is the only knob the harness
-    * varies (8 for the gate queries, 64 at sf10), so the benchmarked
-    * query phase and the plan-locked gate phase are the SAME code. */
+    * r14 sf10 measurements — `nb` is the only knob they varied (8 for
+    * the gate queries, 64 at sf10), so the benchmarked query phase and
+    * the plan-locked gate phase are the SAME code. */
   def buildOrderkeyBucketedTables(s: SparkSession, d: String,
                                   lineitemTbl: String, ordersTbl: String,
                                   nb: Int, withSuppkey: Boolean): Unit = {

@@ -146,7 +146,7 @@ object Similarity {
     // not two 512-byte embeddings. The previous 10-row broadcast NLJ
     // materialized ~1 KB of joined row per scored pair; dropping that
     // copy measured 2.1x on the multi-file sf10 corpus (the recorded
-    // same-session Sim01Tune A/B: 1.37 s -> 0.65 s, identical results;
+    // same-session r14 A/B: 1.37 s -> 0.65 s, identical results;
     // BENCH_SCALING addendum 4) and parity on the single-file layout
     // where the 1-task scan binds.
     QueryDef("sim01_cosine_topk", (s, d) => {

@@ -231,7 +231,7 @@ object TextDedup {
     // band frame is ~4 rows/doc, so the self-join's two-sided shuffle is
     // pure overhead — broadcasting one side deletes the exchange
     // (interleaved sf1 A/B: best 0.296 → 0.256 s; results identical,
-    // R18Probe pair_equality). Only for caller-bounded inputs: the
+    // r18 pair equality). Only for caller-bounded inputs: the
     // whole-corpus consumers (dd08 etc.) keep the scale-honest bucket
     // shuffle join.
     val x = bands.as("x")
@@ -939,7 +939,7 @@ object TextDedup {
       // band width is the knob (64-bit sigs, 16-bit bands).
       // both 28-bit halves come from ONE md5 (hex chars 1-7 and 8-14):
       // the digest is 128 bits, and the second call per word was 30% of
-      // the whole pipeline's wall-clock (Dd04Tune, sf1)
+      // the whole pipeline's wall-clock (r12, sf1)
       val words = docs(s, d)
         .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
         .withColumn("md", md5(col("w").cast("binary")))
@@ -1947,7 +1947,7 @@ object TextDedup {
       // r16b: BINARY fps through the exchange — raw 16-byte md5 is a
       // bijection of the hex fp, so the fp window's partitioning is
       // semantically identical while cargo and sort comparators halve
-      // (1.64 → 1.19 s at sf10m, Dd25Probe F; alternative shapes
+      // (1.64 → 1.19 s at sf10m, r16 variant F; alternative shapes
       // re-measured same-sitting and still worse: broadcast-semi 1.74 s)
       val wins = docs(s, d)
         .select(col("doc_id"), col("lang"),
@@ -2587,8 +2587,8 @@ object TextDedup {
       GROUP BY 1 ORDER BY lang"""))
   )
 
-  /** The tx31 training loop, parameterized by round count so the scale
-    * lane (Tx31Probe) can measure per-round cost beyond the gate's 3:
+  /** The tx31 training loop, parameterized by round count so a scale
+    * run can measure per-round cost beyond the gate's 3:
     * one certificate row per round (round, pair, pair_total, n_tokens,
     * cksum). Per-round work is vocabulary-bounded, and each round's
     * segmentation is MATERIALIZED to parquet and re-read — the

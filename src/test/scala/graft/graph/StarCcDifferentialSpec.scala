@@ -4,7 +4,7 @@ import graft.TestSpark
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -136,5 +136,39 @@ class StarCcDifferentialSpec extends AnyFunSuite {
     check("reliable chain", (1L until 64L).map(v => (v + 1, v)), reliable = true)
     check("reliable duplicates", Seq((3L, 1L), (1L, 3L), (3L, 1L), (2L, 3L), (5L, 4L)),
       reliable = true)
+  }
+
+  test("AQE skew-splits a skewSafe round's join on a hub graph, and no join without skewSafe") {
+    // One vertex on 20% of the edges, on the rounds path (broadcast joins
+    // off), with AQE on and the skew-join thresholds lowered to this
+    // graph's size, as PlanShapeSpec's q54 test does. Without `reExchange`
+    // the mins side's aggregate sits between its exchange and the join,
+    // the shape AQE's skew-join rewrite does not match.
+    val session = spark.newSession()
+    Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32k",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.shuffle.partitions" -> "16").foreach { case (k, v) => session.conf.set(k, v) }
+    val (n, vertices) = (200000L, 50000L)
+    // src is pmod(id, 1), not lit(0): a literal alias under Union trips
+    // Spark 4.1's constraint rewriting
+    val hub = session.range(0, n / 5, 1, 4).select(pmod(col("id"), lit(1L)).as("src"),
+      (pmod(xxhash64(col("id")), lit(vertices - 1)) + 1).as("dst"))
+    val rest = session.range(0, n - n / 5, 1, 4).select(
+      pmod(xxhash64(col("id"), lit("a")), lit(vertices)).as("src"),
+      pmod(xxhash64(col("id"), lit("b")), lit(vertices)).as("dst"))
+    val edges = hub.union(rest).where(col("src") =!= col("dst")).localCheckpoint()
+    def finalPlan(skewSafe: Boolean): String =
+      graft.obs.StageListener.measure(session, s"starcc-skew-$skewSafe") {
+        StarCC.largeStar(edges, skewSafe).write.format("noop").mode("overwrite").save()
+      }.planOutline
+    val safe = finalPlan(skewSafe = true)
+    assert(safe.contains("isFinalPlan=true") && safe.contains("skew=true"), safe)
+    val plain = finalPlan(skewSafe = false)
+    assert(plain.contains("isFinalPlan=true") && !plain.contains("skew=true"), plain)
   }
 }

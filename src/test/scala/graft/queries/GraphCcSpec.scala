@@ -132,4 +132,24 @@ class GraphCcSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     assert(viaAuto == viaFlag, "labelsAuto diverges from labels on the star")
   }
+
+  test("graph15's integer PageRank equals GraphX staticPageRank at sf0.001") {
+    // the same symmetrized cust%4 co-purchase graph on both sides; GraphX's
+    // sum-to-N ranks rescaled by the fixed-point init (base / n)
+    import spark.implicits._
+    val ranks = GraphQueries.integerPageRank(spark, sf, custMod = 4)
+      .as[(Long, Long)].collect().toMap
+    assert(ranks.nonEmpty, "the cust%4 co-purchase graph is empty at sf0.001")
+    val pairs = GraphOps.coPurchasePairs(spark, sf, custMod = 4).select("src", "dst")
+      .as[(Long, Long)].collect().toSeq
+    val edges = spark.sparkContext.parallelize(pairs).flatMap { case (a, b) =>
+      Seq(org.apache.spark.graphx.Edge(a, b, 1), org.apache.spark.graphx.Edge(b, a, 1))
+    }
+    val gx = org.apache.spark.graphx.Graph.fromEdges(edges, 0)
+      .staticPageRank(3, resetProb = 0.15).vertices.collect().toMap
+    assert(ranks.keySet == gx.keySet, "node sets differ")
+    val init = (1000000000000L / ranks.size).toDouble
+    val maxDev = ranks.map { case (v, pr) => math.abs(pr / init - gx(v)) / gx(v) }.max
+    assert(maxDev < 1e-4, s"rank vectors differ: max relative deviation $maxDev")
+  }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Modes (first arg):
   *  - "twins"   — controls q03/q05, bucketed builds (once, reported), then
   *                q59/q60/q68 query phases best-of-3 under the shipped
-  *                bucketSortedSession configs (R16Tune convention).
+  *                bucketSortedSession configs (the r16 convention).
   *  - "graph13" — degree-ordered wedge-join triangle count on the cust%4
   *                co-purchase projection (the r19 envelope's gate point),
   *                derivation and count timed separately.

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.StageListener
 import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.AtomicLong
 
 /** Spill-correctness lane (100 TB posture): run the heaviest headline
   * queries at sf10m inside a deliberately tight memory envelope
@@ -34,28 +33,19 @@ object SpillLane {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val memSpilled = new AtomicLong(0L)
-    val diskSpilled = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        Option(t.taskMetrics).foreach { m =>
-          memSpilled.addAndGet(m.memoryBytesSpilled)
-          diskSpilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-
+    val listener = new StageListener
+    spark.sparkContext.addSparkListener(listener)
     val qs = graft.SparkEntry.queries
     names.foreach { n =>
-      Thread.sleep(1500) // drain the async listener bus: late TaskEnd
-      val (m0, d0) = (memSpilled.get, diskSpilled.get) // events stay with
-      val t0 = System.nanoTime() //                       their own query
-      qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // and the tail of THIS query's events lands too
+      var sec = 0.0
+      val s = listener.measure(spark.sparkContext, s"spill-$n") {
+        val t0 = System.nanoTime()
+        qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        sec = (System.nanoTime() - t0) / 1e9
+      }
       println(f"""{"lane":"spill","query":"$n","sec":$sec%.2f,""" +
-        f""""mem_spilled_mb":${(memSpilled.get - m0) / 1048576},""" +
-        f""""disk_spilled_mb":${(diskSpilled.get - d0) / 1048576},""" +
+        f""""mem_spilled_mb":${s.memSpill / 1048576},""" +
+        f""""disk_spilled_mb":${s.spill / 1048576},""" +
         s""""heap":"${Runtime.getRuntime.maxMemory() / 1048576}m"}""")
     }
     spark.stop()

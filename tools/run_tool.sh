@@ -1,7 +1,11 @@
 #!/bin/bash
-# Run a graft test-classpath tool (PairProbe, R17Probe, ...) from compiled
-# classes without taking the sbt lock. Usage:
+# Run a graft test-classpath tool from compiled classes without taking the
+# sbt lock: the A/B instrument graft.tools.Probe, or one of the lanes in
+# graft.tools (FaultLane, SpillLane, StarCcFaultLane, R20ClusterLane,
+# AgeInteropLane, PushdownAudit). Usage:
 #   run_tool.sh <mainClass> [mem] [args...]
+#   run_tool.sh graft.tools.Probe 8g <corpus dir> 5 q01_agg_pricing \
+#     q01_agg_pricing,spark.sql.autoBroadcastJoinThreshold=-1
 # Env passes through (SPARK_GRAFT_SF_DIR etc).
 set -e
 MAIN=${1:?main class}
